@@ -40,6 +40,7 @@ from polars_view_spark.operators.textstats import (
     STOPWORDS,
     duck_stopword_count_sql,
 )
+from polars_view_spark.sources import store
 
 EMB_DIM = 64
 ANN_K = 5
@@ -3491,11 +3492,9 @@ def _e_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polars_view_spark.operators.events import range_join
 
     t = load_tables(spark, sf_dir, "events")
-    buckets = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(0.0, 10.0, "low"), (10.0, 100.0, "mid"), (100.0, 1e18, "high")],
-            numSlices=1,
-        ),
+    buckets = store.small_frame(
+        spark,
+        [(0.0, 10.0, "low"), (10.0, 100.0, "mid"), (100.0, 1e18, "high")],
         "lo double, hi double, band string",
     )
     out = range_join(t["events"], buckets, "value")
@@ -8484,13 +8483,9 @@ def _e_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-(100 + 10 * i + k), sent_ts, -1, et, 0.0, "")
             for k, et in enumerate(("click", "error"))
         ]
-        # one slice up front: createDataFrame fans rows across
-        # defaultParallelism Python slices and coalesce(1) would evaluate
-        # all of them sequentially inside the single write task (the
-        # measured ~5 s save_classifier anti-pattern)
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, numSlices=1), ev.schema
-        ).write.mode("overwrite").parquet(os.path.join(stage, f"f{i}"))
+        store.small_frame(spark, rows, ev.schema).write.mode("overwrite").parquet(
+            os.path.join(stage, f"f{i}")
+        )
     import glob as _glob
     import time as _time
 

@@ -67,6 +67,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from polars_view_spark.functions.texthash import duck_hex64_sql, duck_tokens_sql
+from polars_view_spark.sources import store
 
 #: hard-sigmoid half-width in margin units: p saturates at |margin| = MC.
 MARGIN_CAP = 1 << 10
@@ -554,13 +555,9 @@ def save_classifier(spark, weights: list[int], path: str) -> None:
     count on load, so a loaded model can never silently score with the
     wrong feature width."""
     rows = [(i, int(w)) for i, w in enumerate(weights)]
-    # ONE slice up front: createDataFrame on local[N] makes N Python
-    # slices, and coalesce(1) would then evaluate all N Python-worker
-    # roundtrips SEQUENTIALLY inside the single write task — measured
-    # ~5 s per 65-row model save at N=32 vs ~0.2 s this way
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=1), "i int, w long"
-    ).write.mode("overwrite").parquet(path)
+    store.small_frame(spark, rows, "i int, w long").write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def load_classifier(spark, path: str) -> tuple[list[int], int]:

@@ -53,6 +53,7 @@ from polars_view_spark.functions.texthash import (
     shingles_expr,
     tokens_expr,
 )
+from polars_view_spark.sources import store
 
 
 def dedup_exact(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -381,7 +382,8 @@ def minhash_build_index(
     (operators/similarity.py:400,454): one offline indexing job, many
     cheap query jobs that never recompute corpus-side state.
 
-    Three parquet datasets under ``path``:
+    Three parquet datasets under ``path`` (the on-disk contract:
+    sources/store.py):
 
     - ``signatures``: one row per corpus doc, ``doc, mh0..mh{k-1}`` —
       the band table the union-mode candidate join needs is a pure
@@ -393,14 +395,6 @@ def minhash_build_index(
       tokenize+shingle recompute of the corpus; ~3× the text in bytes —
       the classic index space-for-time trade, same as the IVF
       assignments dataset carrying its vectors.
-    - (``sizes`` — REMOVED in r11.  The per-doc shingle-count dataset
-      existed for the verify's Jaccard denominators, but the verify's
-      shingle frame is semi-joined to candidate docs at DOC level, so
-      every admitted doc keeps its complete shingle set and the
-      denominators come exactly from a count over that cached,
-      candidate-bounded frame — the persisted table was a corpus-sized
-      write per build/append that nothing read.  A ``sizes`` directory
-      left by an older build is simply ignored.)
     - ``bands``: the long-form band rows annotated with their corpus
       bucket size (``__bsz``, the same window as ``_cap_buckets``) —
       the batch-invariant lookup mode's cap reads corpus state only, so
@@ -493,56 +487,25 @@ def minhash_append_index(
     pinned in tests); refresh ``bands`` periodically to restore the
     cost bound exactly.
 
-    Guards: ids already present in the index AND ids duplicated within
-    the batch itself are REJECTED up front (the common
-    retry-after-partial-failure, double-ingest, and overlapping-source
-    bugs would otherwise silently duplicate per-doc rows — doubled
-    shingle rows corrupt every later Jaccard verdict) — the
-    index-side check reads only the ``doc`` column of the signatures
-    dataset against the broadcast batch ids.  A legacy index without
-    the ``bands`` dataset is rejected BEFORE any write (run
-    :func:`minhash_refresh_bands` first) — failing on it mid-append
-    would leave a half-ingested batch.  The three appends are not
-    transactional: if one fails midway, re-run AFTER removing the
-    batch's rows (or rebuild) — the id guard will refuse a blind re-run
-    that would double-append the datasets written before the failure.
+    Guards (sources/store.py:guard_append, anchored on ``signatures``):
+    ids already indexed or duplicated within the batch are rejected
+    before any write — doubled shingle rows would corrupt every later
+    Jaccard verdict.  A legacy index without the ``bands`` dataset is
+    rejected BEFORE any write too (run :func:`minhash_refresh_bands`
+    first).  The three appends are not transactional: if one fails
+    midway, re-run AFTER removing the batch's rows (or rebuild) — the
+    guard refuses a blind re-run.
     """
     spark = new_docs.sparkSession
-    bands_jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/bands")
-    fs = bands_jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(bands_jpath):
+    if not store.exists(spark, f"{path}/bands"):
         raise ValueError(
             "minhash_append_index: index has no bands dataset (built "
             "before it existed) — run minhash_refresh_bands(path) once, "
             "then append"
         )
-    dup = (
-        new_docs.groupBy(F.col(id_col).alias("doc"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(5)
-        .collect()
+    store.guard_append(
+        "minhash_append_index", new_docs, id_col, f"{path}/signatures", "doc"
     )
-    if dup:
-        raise ValueError(
-            f"minhash_append_index: batch contains duplicate ids (e.g. "
-            f"{sorted(r['doc'] for r in dup)}) — deduplicate before "
-            f"appending"
-        )
-    new_ids = new_docs.select(F.col(id_col).alias("doc"))
-    clash = (
-        spark.read.parquet(f"{path}/signatures")
-        .select("doc")
-        .join(F.broadcast(new_ids), "doc", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"minhash_append_index: ids already indexed (e.g. "
-            f"{sorted(r['doc'] for r in clash)}) — appending would "
-            f"duplicate their rows; deduplicate the batch or rebuild"
-        )
     sh = shingle_table(new_docs, id_col, text_col).cache()
     try:
         sigs = minhash_signatures(
@@ -616,22 +579,16 @@ def minhash_refresh_bands(spark, path: str) -> None:
     refresh restores exact bucket sizes so lookup-mode admission again
     matches a fresh rebuild bit-for-bit.  Also materializes ``bands``
     for a legacy index built before the dataset existed.  Reads only
-    the (narrow) signatures dataset — never the corpus text."""
+    the (narrow) signatures dataset — never the corpus text.  Staged to
+    a sibling and committed by the store swap, so a failed refresh
+    leaves the previous ``bands`` intact."""
     bucket_cols = ["band"] + [f"v{r}" for r in range(MINHASH_BAND_ROWS)]
     sigs = spark.read.parquet(f"{path}/signatures")
-    # stage to a sibling then swap: overwriting bands while deriving it
-    # from a DIFFERENT dataset is safe, but a mid-write failure must not
-    # leave a half-written bands dir for lookups to read
     tmp = f"{path}/bands__refresh_tmp"
     _with_bucket_size(_band_rows(sigs), bucket_cols).write.mode(
         "overwrite"
     ).parquet(tmp)
-    jvm = spark._jvm
-    dst = jvm.org.apache.hadoop.fs.Path(f"{path}/bands")
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(dst, True)
-    fs.rename(src, dst)
+    store.swap(spark, tmp, f"{path}/bands")
 
 
 def minhash_query_index(
@@ -730,9 +687,7 @@ def minhash_query_index(
             # to deriving capped bands from signatures (one window per
             # call — the pre-bands cost, not an error).
             left = F.broadcast(_band_rows(new_sigs)).alias("l")
-            bands_path = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/bands")
-            fs = bands_path.getFileSystem(spark._jsc.hadoopConfiguration())
-            if fs.exists(bands_path):
+            if store.exists(spark, f"{path}/bands"):
                 right = (
                     spark.read.parquet(f"{path}/bands")
                     .filter(F.col("__bsz") <= max_bucket_size)
@@ -764,14 +719,10 @@ def minhash_query_index(
         # semi-join is DOC-level, so every admitted doc keeps its COMPLETE
         # shingle set — which makes the Jaccard denominators derivable
         # from this same bounded frame (exact_jaccard_for_pairs' default
-        # sizes aggregate).  r11: the persisted ``sizes`` dataset is no
-        # longer read here — joining it meant scanning a corpus-sized
-        # per-doc table (twice, once per denominator side) where the
-        # candidate-only aggregate touches cached kilobytes; the dataset
-        # stays written for index-format stability and external readers.
-        # NO corpus-wide aggregate runs at query time either way (the
-        # default aggregate sees candidate docs only), keeping the
-        # O(|new|) CPU claim honest.
+        # sizes aggregate), so the index keeps no per-doc sizes dataset
+        # (it is neither written nor read).  NO corpus-wide aggregate runs
+        # at query time (the default aggregate sees candidate docs only),
+        # keeping the O(|new|) CPU claim honest.
         cand_docs = (
             candidates.select(F.col("doc1").alias("doc"))
             .unionByName(candidates.select(F.col("doc2").alias("doc")))
@@ -1646,9 +1597,8 @@ def containment_build_index(
     try:
         kept.write.mode("overwrite").parquet(f"{path}/kept")
         freq.write.mode("overwrite").parquet(f"{path}/freq")
-        sc = corpus.sparkSession.sparkContext
-        corpus.sparkSession.createDataFrame(
-            sc.parallelize([(int(cap),)], numSlices=1), "cap long"
+        store.small_frame(
+            corpus.sparkSession, [(int(cap),)], "cap long"
         ).write.mode("overwrite").parquet(f"{path}/meta")
     finally:
         kept.unpersist()

@@ -22,6 +22,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polars_view_spark.sources import store
+
 #: rule names and column names are spliced into SQL identifiers/aliases —
 #: restrict them to identifier shape so no input can break (or inject
 #: into) the generated expressions
@@ -399,8 +401,5 @@ def audited_write(
     observed = df.observe(obs, *aliased)
     observed.write.mode("overwrite").format(fmt).save(path)
     got = obs.get  # blocks until the write's QueryExecution reports
-    spark = df.sparkSession
     row = tuple(got[n] for n in names)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize([row], numSlices=1), metrics_schema
-    )
+    return store.small_frame(df.sparkSession, [row], metrics_schema)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_view_spark.functions.texthash import TOKEN_REGEX
+from polars_view_spark.sources import store
 
 #: default context-window capacity (tokens) for packing
 CONTEXT_TOKENS = 512
@@ -634,11 +635,7 @@ def balanced_shards(
     for r in per_part:
         offsets.append((r["__pid"], cum))
         cum += r["ptoks"]
-    spark = df.sparkSession
-    off = spark.createDataFrame(
-        spark.sparkContext.parallelize(offsets, numSlices=1),
-        "__pid int, __off long",
-    )
+    off = store.small_frame(df.sparkSession, offsets, "__pid int, __off long")
     w = (
         Window.partitionBy("__pid")
         .orderBy(id_col)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from polars_view_spark.config import MAX_NAME_ATTEMPTS
 from polars_view_spark.errors import ColumnNameConflictError
+from polars_view_spark.sources import store
 
 _MID = "__pvs_mid__"
 _PID = "__pvs_pid__"
@@ -93,12 +94,8 @@ def add_row_index(df: DataFrame, name: str = "Row Number", offset: int = 1) -> D
         empty = df.withColumn(resolved, F.lit(None).cast("long"))
         return empty.select(resolved, *df.columns)
 
-    spark = df.sparkSession
-    # one slice: a per-partition offset table is N tiny rows — a plain
-    # createDataFrame fans it across defaultParallelism Python slices
-    offset_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(offsets, numSlices=1),
-        schema=f"{_PID} long, {_OFFSET} long",
+    offset_df = store.small_frame(
+        df.sparkSession, offsets, f"{_PID} long, {_OFFSET} long"
     )
     # LEFT join + null check: if the persisted lineage were ever recomputed
     # with different partition ids, the unmatched rows surface as an error

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_view_spark.functions.vectors import cosine_sql, lsh_bucket_sql
+from polars_view_spark.sources import store
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -166,12 +167,8 @@ def ivf_topk(
 
     # per-query n_probe nearest centroids (centroids are tiny — broadcast math)
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    spark = corpus.sparkSession
-    # one slice: k tiny rows must not fan out across defaultParallelism
-    # Python slices (see _kmeans_fit / save_classifier)
-    centers_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(centers, numSlices=1),
-        "cell int, center array<double>",
+    centers_df = store.small_frame(
+        corpus.sparkSession, centers, "cell int, center array<double>"
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
@@ -438,14 +435,9 @@ def ivf_build_index(
     spark = corpus.sparkSession
     from polars_view_spark.functions.vectors import norm_sql
 
-    # one slice up front: createDataFrame on local[N] makes N Python
-    # slices and coalesce(1) evaluates them sequentially in the write
-    # task (~5 s of Python-worker roundtrips at N=32 for a tiny table)
-    cent = spark.createDataFrame(
-        spark.sparkContext.parallelize(list(zip(cells, seed_ints)), numSlices=1),
-        "cell BIGINT, sv ARRAY<BIGINT>",
-    )
-    cent.write.mode("overwrite").parquet(f"{path}/centroids")
+    store.small_frame(
+        spark, list(zip(cells, seed_ints)), "cell BIGINT, sv ARRAY<BIGINT>"
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
     assigned = _with_sorted_cells(
         corpus.filter(F.col(vec_col).isNotNull()), vec_col, cells, seed_ints, scale
     ).select(
@@ -482,45 +474,19 @@ def ivf_append_index(
     is a rebuild trigger, monitored in production by cell-size skew, not
     something an append can fix.
 
-    Guards: ids already present in the index AND ids duplicated within
-    the batch are rejected up front (either would duplicate neighbor
-    rows, letting one vector occupy several top-k slots in every later
-    probe) — the index-side check reads only the ``neighbor_id`` column
-    against the broadcast batch ids.
+    Guards (sources/store.py:guard_append, anchored on ``assignments``):
+    ids already indexed or duplicated within the batch are rejected
+    before any write — either would let one vector occupy several top-k
+    slots in every later probe.
     """
     from polars_view_spark.functions.vectors import norm_sql
 
     spark = new_vectors.sparkSession
-    dup = (
-        new_vectors.groupBy(F.col(id_col).alias("neighbor_id"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(5)
-        .collect()
+    store.guard_append(
+        "ivf_append_index", new_vectors, id_col, f"{path}/assignments",
+        "neighbor_id",
     )
-    if dup:
-        raise ValueError(
-            f"ivf_append_index: batch contains duplicate ids (e.g. "
-            f"{sorted(r['neighbor_id'] for r in dup)}) — deduplicate "
-            f"before appending"
-        )
-    new_ids = new_vectors.select(F.col(id_col).alias("neighbor_id"))
-    clash = (
-        spark.read.parquet(f"{path}/assignments")
-        .select("neighbor_id")
-        .join(F.broadcast(new_ids), "neighbor_id", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"ivf_append_index: ids already indexed (e.g. "
-            f"{sorted(r['neighbor_id'] for r in clash)}) — appending "
-            f"would duplicate their rows; deduplicate the batch or rebuild"
-        )
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cells = [int(r["cell"]) for r in cent_rows]
-    seed_ints = [[int(x) for x in r["sv"]] for r in cent_rows]
+    cells, seed_ints = store.read_frozen(spark, f"{path}/centroids", "cell")
     assigned = _with_sorted_cells(
         new_vectors.filter(F.col(vec_col).isNotNull()),
         vec_col,
@@ -560,10 +526,7 @@ def ivf_query_index(
     """
     from polars_view_spark.functions.vectors import dot_sql, norm_sql
 
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cells = [int(r["cell"]) for r in cent_rows]
-    seed_ints = [[int(x) for x in r["sv"]] for r in cent_rows]
-
+    cells, seed_ints = store.read_frozen(spark, f"{path}/centroids", "cell")
     assigned = spark.read.parquet(f"{path}/assignments").withColumn(
         "cell", F.col("cell").cast("long")
     )
@@ -1292,15 +1255,8 @@ def kmeans_clusters(
             F.min("vid").cast("long").alias("exemplar"),
         )
     )
-    spark = df.sparkSession
-    # ONE slice up front (same rationale as save_classifier): a plain
-    # createDataFrame fans k rows across defaultParallelism Python slices,
-    # paying ~32 Python-worker roundtrips to evaluate a 4-row frame
-    cent_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(cid, vec) for cid, vec in sorted(centroids.items())], numSlices=1
-        ),
-        "cid INT, c ARRAY<BIGINT>",
+    cent_df = store.small_frame(
+        df.sparkSession, sorted(centroids.items()), "cid INT, c ARRAY<BIGINT>"
     ).withColumn(
         "centroid_norm",
         F.expr(
@@ -1911,13 +1867,9 @@ def pq_build_index(
     _c, _a, seed_ints = _seed_centroids(
         corpus, id_col, vec_col, seed_mod, scale, k_sub
     )
-    cb = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(j, sv) for j, sv in enumerate(seed_ints)], numSlices=1
-        ),
-        "j INT, sv ARRAY<BIGINT>",
-    )
-    cb.write.mode("overwrite").parquet(f"{path}/codebook")
+    store.small_frame(
+        spark, list(enumerate(seed_ints)), "j INT, sv ARRAY<BIGINT>"
+    ).write.mode("overwrite").parquet(f"{path}/codebook")
     books = _pq_books(seed_ints, m_sub)
     _pq_encode(corpus, id_col, vec_col, books, scale).write.mode(
         "overwrite"
@@ -1940,10 +1892,7 @@ def pq_query_index(
     minhash_query_index economics), and the ADC ranking is the SAME
     helper the in-session path uses, so persisted results reproduce
     pq_topk bit-for-bit (held to the same oracle)."""
-    rows = (
-        spark.read.parquet(f"{path}/codebook").orderBy("j").collect()
-    )
-    books = _pq_books([list(r["sv"]) for r in rows], m_sub)
+    books = _pq_books(store.read_frozen(spark, f"{path}/codebook", "j")[1], m_sub)
     codes = spark.read.parquet(f"{path}/codes")
     return _pq_adc_topk(codes, queries, id_col, vec_col, books, k, scale)
 
@@ -2182,18 +2131,12 @@ def ivfpq_build_index(
     _c, _a, pq_ints = _seed_centroids(
         corpus, id_col, vec_col, pq_seed_mod, scale, k_sub
     )
-    cent = spark.createDataFrame(
-        spark.sparkContext.parallelize(list(zip(cells, ivf_ints)), numSlices=1),
-        "cell BIGINT, sv ARRAY<BIGINT>",
-    )
-    cent.write.mode("overwrite").parquet(f"{path}/centroids")
-    cb = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(j, sv) for j, sv in enumerate(pq_ints)], numSlices=1
-        ),
-        "j INT, sv ARRAY<BIGINT>",
-    )
-    cb.write.mode("overwrite").parquet(f"{path}/codebook")
+    store.small_frame(
+        spark, list(zip(cells, ivf_ints)), "cell BIGINT, sv ARRAY<BIGINT>"
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    store.small_frame(
+        spark, list(enumerate(pq_ints)), "j INT, sv ARRAY<BIGINT>"
+    ).write.mode("overwrite").parquet(f"{path}/codebook")
     books = _pq_books(pq_ints, m_sub)
     pq_codes = _pq_codes_udf(books)
     codes = _with_sorted_cells(
@@ -2229,11 +2172,8 @@ def ivfpq_query_index(
     re-scanned or re-encoded.  Shares :func:`_ivfpq_shortlist` and
     :func:`_exact_l2_rerank` with the in-session path, so persisted
     results reproduce :func:`ivfpq_topk` bit-for-bit (same oracle)."""
-    cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cells = [int(r["cell"]) for r in cent]
-    ivf_ints = [[int(x) for x in r["sv"]] for r in cent]
-    cb = spark.read.parquet(f"{path}/codebook").orderBy("j").collect()
-    books = _pq_books([list(r["sv"]) for r in cb], m_sub)
+    cells, ivf_ints = store.read_frozen(spark, f"{path}/centroids", "cell")
+    books = _pq_books(store.read_frozen(spark, f"{path}/codebook", "j")[1], m_sub)
     codes = spark.read.parquet(f"{path}/codes").select(
         "neighbor_id", F.col("cell").cast("long").alias("cell"), "codes"
     )
@@ -2264,44 +2204,14 @@ def ivfpq_append_index(
     frozen geometry degrades recall for new-regime vectors — a rebuild
     trigger (monitored via cell-size skew), not something append fixes.
 
-    Guards (the ivf_append_index contract): ids duplicated within the
-    batch and ids already present in the index are rejected up front —
-    either would let one vector occupy several top-k slots; the
-    index-side check reads ONLY the ``neighbor_id`` column against the
-    broadcast batch ids."""
+    Guards: sources/store.py:guard_append, anchored on ``codes``."""
     spark = new_vectors.sparkSession
-    dup = (
-        new_vectors.groupBy(F.col(id_col).alias("neighbor_id"))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(5)
-        .collect()
+    store.guard_append(
+        "ivfpq_append_index", new_vectors, id_col, f"{path}/codes",
+        "neighbor_id",
     )
-    if dup:
-        raise ValueError(
-            f"ivfpq_append_index: batch contains duplicate ids (e.g. "
-            f"{sorted(r['neighbor_id'] for r in dup)}) — deduplicate "
-            f"before appending"
-        )
-    new_ids = new_vectors.select(F.col(id_col).alias("neighbor_id"))
-    clash = (
-        spark.read.parquet(f"{path}/codes")
-        .select("neighbor_id")
-        .join(F.broadcast(new_ids), "neighbor_id", "left_semi")
-        .limit(5)
-        .collect()
-    )
-    if clash:
-        raise ValueError(
-            f"ivfpq_append_index: ids already indexed (e.g. "
-            f"{sorted(r['neighbor_id'] for r in clash)}) — appending "
-            f"would duplicate their rows; deduplicate the batch or rebuild"
-        )
-    cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    cells = [int(r["cell"]) for r in cent]
-    ivf_ints = [[int(x) for x in r["sv"]] for r in cent]
-    cb = spark.read.parquet(f"{path}/codebook").orderBy("j").collect()
-    books = _pq_books([list(r["sv"]) for r in cb], m_sub)
+    cells, ivf_ints = store.read_frozen(spark, f"{path}/centroids", "cell")
+    books = _pq_books(store.read_frozen(spark, f"{path}/codebook", "j")[1], m_sub)
     pq_codes = _pq_codes_udf(books)
     codes = _with_sorted_cells(
         new_vectors.filter(F.col(vec_col).isNotNull()),

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polars_view_spark.sources import store
+
 _PRESENT = "__pvs_present"
 
 
@@ -144,8 +146,7 @@ def retention_vacuum(
     """
     if keep < 1:
         raise ValueError("keep must be >= 1 (refusing to drop every partition)")
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = store.filesystem(spark, path)
     if not fs.exists(jpath):
         raise ValueError(f"dataset path {path!r} does not exist")
     prefix = f"{partition_col}="
@@ -169,10 +170,8 @@ def retention_vacuum(
         if not is_kept:
             fs.delete(ppath, True)
         audit.append((value, is_kept))
-    # one slice: the audit is a handful of rows (see rowindex/_kmeans_fit)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(audit, numSlices=1),
-        f"{partition_col} string, kept boolean",
+    return store.small_frame(
+        spark, audit, f"{partition_col} string, kept boolean"
     )
 
 

@@ -31,11 +31,11 @@ PUNCT_REGEX = r"[^A-Za-z0-9 \t\n\x0B\f\r]"  # \s spelled out: RE2's \s omits \x0
 
 #: the ALLOWED set PUNCT_REGEX negates, as a Spark SQL string literal for
 #: ``translate`` (quality_score's regex-free punct count).  Escapes are
-#: Spark-SQL-parsed: \t/\n/\f/\r are the control chars; \x0B has no SQL
-#: escape so it rides as a unicode literal via Python chr(11).
+#: Spark-SQL-parsed: \t/\n/\r are the control chars; Spark SQL has no
+#: escape for \x0B or \f, so both ride as literal characters via chr().
 _PUNCT_ALLOWED_SQL = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
-    " \\t\\n" + chr(11) + "\\f\\r"
+    " \\t\\n" + chr(11) + chr(12) + "\\r"
 )
 
 

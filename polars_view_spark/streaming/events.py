@@ -14,9 +14,13 @@ safe to promote from backfill to live pipelines.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from polars_view_spark.sources import store
 
 #: events table schema with nanosecond ts already normalized to long
 EVENT_SCHEMA = T.StructType(
@@ -482,12 +486,12 @@ def streaming_upsert(
     table continuously current.
 
     Each batch writes the merged snapshot to a sibling temp directory and
-    swaps it in only after the write succeeds, so readers never observe a
-    half-written snapshot and a failed batch leaves the previous one
-    intact.  The swap is the local-filesystem stand-in for a transactional
-    table commit — on a real cluster the same ``foreachBatch`` body targets
-    a transactional table format (e.g. an Iceberg/Delta MERGE) instead of a
-    directory rename, and nothing upstream changes.  Within one micro-batch
+    commits it with the store swap (sources/store.py), so readers never
+    observe a half-written snapshot and a failed batch leaves the previous
+    one intact.  The swap stands in for a transactional table commit — on
+    a real cluster the same ``foreachBatch`` body targets a transactional
+    table format (e.g. an Iceberg/Delta MERGE) instead of a directory
+    rename, and nothing upstream changes.  Within one micro-batch
     changes are deduplicated to one row per key (arbitrary winner), so the
     result is deterministic only when a source emits at most one change per
     key per batch — sources that batch several must carry a sequence column
@@ -497,15 +501,12 @@ def streaming_upsert(
     what exists, then stops; swap for a processing-time trigger in a
     long-lived deployment).
     """
-    import os
-    import shutil
-
     from polars_view_spark.operators.snapshot import merge_upsert
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.dropDuplicates(key_cols)
-        if os.path.exists(snapshot_dir):
+        if store.exists(spark, snapshot_dir):
             base = spark.read.parquet(snapshot_dir)
             merged = merge_upsert(base, batch_df, key_cols, delete_col)
         else:
@@ -516,16 +517,9 @@ def streaming_upsert(
                 ).drop(delete_col)
         tmp = snapshot_dir.rstrip("/") + ".__pvs_tmp"
         merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(snapshot_dir):
-            shutil.rmtree(snapshot_dir)
-        os.rename(tmp, snapshot_dir)
+        store.swap(spark, tmp, snapshot_dir)
 
-    return (
-        changes_stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", snapshot_dir.rstrip("/") + ".__pvs_ckpt")
-        .start()
-    )
+    return _available_now_sink(changes_stream, snapshot_dir, apply_batch=apply_batch)
 
 
 def streaming_minhash_dedup(
@@ -557,33 +551,20 @@ def streaming_minhash_dedup(
     bucket that only later crosses the cap can contribute early pairs a
     final-corpus batch run would have dropped — more recall, never less.
 
-    Delivery: ``foreachBatch`` is at-least-once — a crash between the two
-    writes, or a retry after a partial write, re-runs the batch.  Both
-    sinks are therefore partitioned by the (replay-stable) ``batch_id``
-    and written with dynamic partition OVERWRITE, so a re-run replaces its
-    own partition instead of appending a duplicate — at-least-once
-    delivery + idempotent writes = effectively-once output.  Swap the
-    ``availableNow`` trigger for processing-time in a long-lived
-    deployment.
+    Delivery: a crash between the two writes, or a retry after a partial
+    write, re-runs the batch; both sinks are written per ``batch_id``
+    (the effectively-once contract in sources/store.py), so a re-run
+    replaces its own partitions.  Swap the ``availableNow`` trigger for
+    processing-time in a long-lived deployment.
     """
-    import os
-
     from polars_view_spark.operators.dedup import minhash_lsh_pairs_incremental
-
-    def _overwrite_own_partition(df: DataFrame, part_col: str, out_dir: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(part_col)
-            .parquet(out_dir)
-        )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.dropDuplicates([id_col])
         if batch_df.isEmpty():
             return
-        if os.path.exists(corpus_dir):
+        if store.exists(spark, corpus_dir):
             # a replayed batch must pair against the corpus as it stood
             # BEFORE its own earlier attempt: strictly EARLIER batches
             # only.  `< batch_id` (not `!=`): after a checkpoint reset, a
@@ -598,60 +579,74 @@ def streaming_minhash_dedup(
         pairs = minhash_lsh_pairs_incremental(
             base, batch_df, id_col, text_col, jaccard_threshold
         )
-        _overwrite_own_partition(
-            pairs.withColumn("batch_id", F.lit(batch_id)), "batch_id", pairs_dir
-        )
-        _overwrite_own_partition(
-            batch_df.withColumn("ingest_batch", F.lit(batch_id)),
-            "ingest_batch",
-            corpus_dir,
-        )
+        store.write_batch(pairs, pairs_dir, batch_id)
+        store.write_batch(batch_df, corpus_dir, batch_id, col="ingest_batch")
 
-    return (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", corpus_dir.rstrip("/") + ".__pvs_ckpt")
-        .start()
-    )
+    return _available_now_sink(docs_stream, corpus_dir, apply_batch=apply_batch)
+
+
+def _write_sink_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    sink_dir: str,
+    batch_frame_fn,
+    dedup_col: str | None = None,
+    lead_cols: tuple[str, ...] = (),
+) -> None:
+    """The foreachBatch body of every frame sink: optionally dedup the
+    batch on ``dedup_col``, skip an empty batch, and write
+    ``batch_frame_fn(batch_df)`` into the batch's own partition of
+    ``sink_dir`` (store.write_batch)."""
+    if dedup_col is not None:
+        batch_df = batch_df.dropDuplicates([dedup_col])
+    if batch_df.isEmpty():
+        return
+    store.write_batch(batch_frame_fn(batch_df), sink_dir, batch_id, lead_cols=lead_cols)
 
 
 def _available_now_sink(
     stream: DataFrame,
     sink_dir: str,
-    batch_frame_fn,
+    batch_frame_fn=None,
     dedup_col: str | None = None,
+    *,
+    lead_cols: tuple[str, ...] = (),
+    apply_batch=None,
+    pinned: tuple[DataFrame, ...] = (),
 ):
-    """The ONE effectively-once availableNow sink discipline shared by the
-    fixed-reference screens/gates (`streaming_containment_screen`,
-    `streaming_ann_lookup`, `streaming_minhash_lookup`,
-    `streaming_expectations_gate`): per trigger, optionally
-    per-batch-dedup on ``dedup_col``, skip empty batches, evaluate
-    ``batch_frame_fn(batch_df)``, and write the result partitioned by
-    the replay-stable ``batch_id`` with dynamic partition OVERWRITE — so
-    an at-least-once foreachBatch re-run replaces its own partition
-    instead of duplicating it.  Defined once so the delivery contract
-    cannot drift between consumers."""
+    """Start the ONE kind of foreachBatch query this module runs: an
+    ``availableNow`` drain checkpointed at ``<sink_dir>.__pvs_ckpt``.
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if dedup_col is not None:
-            batch_df = batch_df.dropDuplicates([dedup_col])
-        if batch_df.isEmpty():
-            return
-        (
-            batch_frame_fn(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sink_dir)
+    The per-batch body is ``apply_batch`` when given, else
+    :func:`_write_sink_batch` over ``batch_frame_fn`` / ``dedup_col`` /
+    ``lead_cols`` — the effectively-once sink of sources/store.py.
+    ``pinned`` frames are unpersisted when the query ends, or at once if
+    it fails to start (:func:`_release_on_termination`)."""
+    if apply_batch is None:
+        apply_batch = functools.partial(
+            _write_sink_batch,
+            sink_dir=sink_dir,
+            batch_frame_fn=batch_frame_fn,
+            dedup_col=dedup_col,
+            lead_cols=lead_cols,
         )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", sink_dir.rstrip("/") + ".__pvs_ckpt")
-        .start()
+    listener = (
+        _release_on_termination(stream.sparkSession, pinned) if pinned else None
     )
+    try:
+        q = (
+            stream.writeStream.foreachBatch(apply_batch)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", sink_dir.rstrip("/") + ".__pvs_ckpt")
+            .start()
+        )
+    except Exception:
+        if listener is not None:
+            listener.release_now()
+        raise
+    if listener is not None:
+        listener.arm(str(q.id))
+    return q
 
 
 def _release_on_termination(spark, frames):
@@ -662,8 +657,8 @@ def _release_on_termination(spark, frames):
     landing dir) cannot finish before the listener exists; because the
     target query id is only known after ``start()`` returns, the listener
     buffers terminations seen while unarmed and ``arm()`` replays them.
-    Callers: ``release_now()`` in the except path around ``start()``,
-    ``arm(str(q.id))`` after it."""
+    Its caller, :func:`_available_now_sink`, calls ``release_now()`` when
+    ``start()`` raises and ``arm(str(q.id))`` after it returns."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     class _Release(StreamingQueryListener):
@@ -735,10 +730,7 @@ def streaming_containment_screen(
     redelivered in a LATER file is flagged again (same verdict — the
     corpus is fixed), so multiset equality additionally assumes
     upstream-unique ids; redelivered files are absorbed by the
-    checkpoint.  Delivery is the same effectively-once discipline: the sink is
-    partitioned by the replay-stable ``batch_id`` and written with
-    dynamic partition OVERWRITE, so an at-least-once ``foreachBatch``
-    re-run replaces its own partition instead of duplicating it.
+    checkpoint.  Delivery is effectively-once (sources/store.py).
 
     Per-trigger cost is O(|batch| signatures × bucket ≤ cap): the corpus
     fingerprint/frequency table is computed ONCE up front
@@ -769,23 +761,15 @@ def streaming_containment_screen(
     else:
         stats = containment_corpus_stats(corpus, id_col, text_col)
 
-    listener = _release_on_termination(
-        corpus.sparkSession, [stats[0], stats[1]]
+    return _available_now_sink(
+        docs_stream,
+        flags_dir,
+        lambda batch_df: doc_containment_screen(
+            corpus, batch_df, id_col, text_col, corpus_stats=stats
+        ),
+        dedup_col=id_col,
+        pinned=(stats[0], stats[1]),
     )
-    try:
-        q = _available_now_sink(
-            docs_stream,
-            flags_dir,
-            lambda batch_df: doc_containment_screen(
-                corpus, batch_df, id_col, text_col, corpus_stats=stats
-            ),
-            dedup_col=id_col,
-        )
-    except Exception:
-        listener.release_now()
-        raise
-    listener.arm(str(q.id))
-    return q
 
 
 def read_sink_or_empty(spark, path: str, schema: str) -> DataFrame:
@@ -799,11 +783,8 @@ def read_sink_or_empty(spark, path: str, schema: str) -> DataFrame:
     FROM the path (not an os-level glob), so schemed URIs — ``file:``,
     ``hdfs://``, ``s3a://`` — probe the store the sink actually wrote to
     instead of silently reading a populated remote sink back as empty."""
-    from pyspark.sql import types as T
-
     names = [f.name for f in T.StructType.fromDDL(schema).fields]
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = store.filesystem(spark, path)
 
     def _has_data_file() -> bool:
         if not fs.exists(jpath):
@@ -921,9 +902,8 @@ def streaming_ann_lookup(
     two different triggers is answered twice (identically — it is a
     lookup, re-querying is harmless), so exact multiset equality with a
     deduplicated batch run additionally assumes upstream-unique ids, as
-    redelivered FILES are already absorbed by the checkpoint.  Sink
-    discipline is effectively-once (replay-stable ``batch_id`` partition,
-    dynamic partition overwrite).
+    redelivered FILES are already absorbed by the checkpoint.  Delivery
+    is effectively-once (sources/store.py).
 
     Per-trigger cost: O(|batch| × probed cells) — the corpus is never
     rescanned; the index's partition pruning does the work.
@@ -967,8 +947,7 @@ def streaming_expectations_gate(
     that batch's row count — a gate verdict is about the batch at the
     door, unlike the batch-invariant screens whose union equals a
     one-shot run); redelivered files are absorbed by the checkpoint and
-    the replay-stable ``batch_id`` dynamic partition overwrite keeps
-    delivery effectively-once.  Per-trigger cost: ONE scan + ONE
+    delivery is effectively-once (sources/store.py).  Per-trigger cost: ONE scan + ONE
     aggregate of the batch regardless of rule count, plus the profile's
     few-row read.
     """
@@ -1021,8 +1000,7 @@ def streaming_minhash_lookup(
     concern, :func:`streaming_minhash_dedup`'s job).  Per-batch
     dropDuplicates does not span triggers — multiset equality assumes
     upstream-unique ids; redelivered FILES are absorbed by the
-    checkpoint.  Sink discipline is effectively-once (replay-stable
-    ``batch_id`` partition, dynamic partition overwrite).
+    checkpoint.  Delivery is effectively-once (sources/store.py).
 
     Per-trigger cost: O(|batch|) tokenize/hash CPU + one broadcast of
     the batch's band rows into the index scan — the corpus is never
@@ -1201,29 +1179,16 @@ def streaming_router(
     ]
     best = F.greatest(*cands)
 
-    def route_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.dropDuplicates([id_col])
-        if batch_df.isEmpty():
-            return
+    def route_batch(batch_df: DataFrame) -> DataFrame:
         feats = hashed_doc_vectors(
             batch_df, id_col=id_col, text_col=text_col, dim=dim
         ).select("doc", "vec")
-        (
-            feats.select(
-                "doc", best["route"].alias("route"), best["m"].alias("margin")
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("route", "batch_id")
-            .parquet(sink_dir)
+        return feats.select(
+            "doc", best["route"].alias("route"), best["m"].alias("margin")
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(route_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", sink_dir.rstrip("/") + ".__pvs_ckpt")
-        .start()
+    return _available_now_sink(
+        docs_stream, sink_dir, route_batch, dedup_col=id_col, lead_cols=("route",)
     )
 
 
@@ -1265,21 +1230,15 @@ def streaming_linkage(
     from polars_view_spark.operators.linkage import linkage_score
 
     pinned = master.persist()
-    listener = _release_on_termination(master.sparkSession, [pinned])
-    try:
-        q = _available_now_sink(
-            arrivals,
-            sink_dir,
-            lambda batch_df: linkage_score(
-                pinned, batch_df, block_on, rules_fn(), threshold
-            ).filter("is_match"),
-            dedup_col=id_col,
-        )
-    except Exception:
-        listener.release_now()
-        raise
-    listener.arm(str(q.id))
-    return q
+    return _available_now_sink(
+        arrivals,
+        sink_dir,
+        lambda batch_df: linkage_score(
+            pinned, batch_df, block_on, rules_fn(), threshold
+        ).filter("is_match"),
+        dedup_col=id_col,
+        pinned=(pinned,),
+    )
 
 
 def streaming_click_outcomes(
@@ -1348,11 +1307,8 @@ def streaming_countmin(
     """Continuously-maintained Count-Min frequency sketch: each
     micro-batch contributes its own PARTIAL counter set
     (operators/sketches.py:countmin_sketch over just that batch), written
-    to a ``batch_id``-partitioned parquet with dynamic partition
-    OVERWRITE — the replay-stable idiom (streaming_minhash_dedup
-    docstring): at-least-once ``foreachBatch`` re-runs replace their own
-    partition, so delivery + idempotent writes = effectively-once
-    counters.  The queryable sketch is the cell-wise SUM over partials
+    to its own ``batch_id`` partition — effectively-once counters
+    (sources/store.py).  The queryable sketch is the cell-wise SUM over partials
     (:func:`read_countmin`), and the Count-Min merge law guarantees it
     equals the one-shot sketch of everything ingested — the property the
     batch entry's pytest pins (test_countmin_sketch_properties_and_plan).
@@ -1366,14 +1322,12 @@ def streaming_countmin(
     Returns the started StreamingQuery (``availableNow`` — drain and
     stop; processing-time trigger in a live deployment).
     """
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        countmin_apply_batch(batch_df, batch_id, sketch_dir, text_col)
-
-    return (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", sketch_dir.rstrip("/") + ".__pvs_ckpt")
-        .start()
+    return _available_now_sink(
+        docs_stream,
+        sketch_dir,
+        apply_batch=functools.partial(
+            countmin_apply_batch, sketch_dir=sketch_dir, text_col=text_col
+        ),
     )
 
 
@@ -1381,22 +1335,13 @@ def countmin_apply_batch(
     batch_df: DataFrame, batch_id: int, sketch_dir: str, text_col: str = "text"
 ) -> None:
     """The foreachBatch body of :func:`streaming_countmin`, module-level
-    so the replay contract is directly testable (VERDICT r08 task 3):
-    re-running the SAME ``batch_id`` dynamically overwrites ONLY its own
-    partition, leaving the summed sketch unchanged — at-least-once
-    delivery + this idempotent write = effectively-once counters."""
+    so the replay contract is directly testable: re-running the SAME
+    ``batch_id`` overwrites ONLY its own partition, leaving the summed
+    sketch unchanged."""
     from polars_view_spark.operators.sketches import countmin_sketch
 
-    if batch_df.isEmpty():
-        return
-    part = countmin_sketch(batch_df, text_col).withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    (
-        part.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(sketch_dir)
+    _write_sink_batch(
+        batch_df, batch_id, sketch_dir, lambda b: countmin_sketch(b, text_col)
     )
 
 
@@ -1416,24 +1361,14 @@ def bloom_apply_batch(
     batch_df: DataFrame, batch_id: int, filter_dir: str, key_col: str = "fp"
 ) -> None:
     """foreachBatch body of :func:`streaming_bloom` (module-level so the
-    replay contract is directly testable, the countmin_apply_batch
-    discipline): each micro-batch contributes its own PARTIAL Bloom
-    filter, written to a batch_id partition with dynamic overwrite — an
-    at-least-once re-run replaces only its own partition, and the
-    queryable filter (:func:`read_bloom`, bit_or over partials) is
-    unchanged: effectively-once membership."""
+    replay contract is directly testable, like countmin_apply_batch):
+    each micro-batch contributes its own PARTIAL Bloom filter to its own
+    ``batch_id`` partition, so a re-run leaves the queryable filter
+    (:func:`read_bloom`, bit_or over partials) unchanged."""
     from polars_view_spark.operators.sketches import bloom_build
 
-    if batch_df.isEmpty():
-        return
-    part = bloom_build(batch_df, key_col).withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    (
-        part.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(filter_dir)
+    _write_sink_batch(
+        batch_df, batch_id, filter_dir, lambda b: bloom_build(b, key_col)
     )
 
 
@@ -1449,14 +1384,12 @@ def streaming_bloom(
     answerable mid-stream from O(BF_BITS) state, with the corpus never
     re-scanned.  Returns the started availableNow query."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bloom_apply_batch(batch_df, batch_id, filter_dir, key_col)
-
-    return (
-        keys_stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", filter_dir.rstrip("/") + ".__pvs_ckpt")
-        .start()
+    return _available_now_sink(
+        keys_stream,
+        filter_dir,
+        apply_batch=functools.partial(
+            bloom_apply_batch, filter_dir=filter_dir, key_col=key_col
+        ),
     )
 
 
@@ -1487,9 +1420,8 @@ def streaming_pq_lookup(
     arriving query vectors are ADC-scored against the 16-int-per-vector
     codes dataset, which is never re-encoded.  Per-query independence
     from the FIXED index gives the same no-divergence property (union of
-    batches == one-shot batch query of the distinct arrivals); sink
-    discipline is effectively-once (batch_id partitions, dynamic
-    overwrite)."""
+    batches == one-shot batch query of the distinct arrivals); delivery
+    is effectively-once (sources/store.py)."""
     from polars_view_spark.operators.similarity import pq_query_index
 
     return _available_now_sink(
@@ -1530,8 +1462,7 @@ def streaming_ivfpq_lookup(
     rerank of O(queries × shortlist) rows per batch — never re-scanned.
     Per-query independence from the FIXED index gives the usual
     no-divergence property (union of batches == one-shot batch query);
-    sink discipline is effectively-once (batch_id partitions, dynamic
-    overwrite)."""
+    delivery is effectively-once (sources/store.py)."""
     from polars_view_spark.operators.similarity import ivfpq_query_index
 
     return _available_now_sink(

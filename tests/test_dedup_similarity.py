@@ -20,6 +20,28 @@ def embeddings(spark):
     return load_tables(spark, SF, "embeddings")["embeddings"]
 
 
+@pytest.fixture(scope="module")
+def built_indexes(spark, documents, embeddings, tmp_path_factory):
+    """One persisted index per appendable family, built over the ids NOT
+    ending in 5 (the withheld slice an append test can offer)."""
+    from pyspark.sql import functions as F
+
+    from polars_view_spark.operators.dedup import minhash_build_index
+    from polars_view_spark.operators.similarity import (
+        ivf_build_index,
+        ivfpq_build_index,
+    )
+
+    root = tmp_path_factory.mktemp("indexes")
+    minhash_build_index(
+        documents.filter(F.col("doc_id") % 10 != 5), str(root / "minhash")
+    )
+    base = embeddings.filter(F.col("vec_id") % 10 != 5)
+    ivf_build_index(base, str(root / "ivf"))
+    ivfpq_build_index(base, str(root / "ivfpq"))
+    return root
+
+
 class TestMinHashRecall:
     def test_lsh_finds_all_high_jaccard_pairs(self, spark, documents):
         """Every true pair with Jaccard >= 0.8 must survive the banded-LSH
@@ -2118,6 +2140,49 @@ class TestIvfAppend:
         with _pytest.raises(ValueError, match="duplicate ids"):
             ivf_append_index(batch.unionByName(batch.limit(1)), idx)
 
+    @pytest.mark.parametrize("reject", ["duplicate ids", "already indexed"])
+    @pytest.mark.parametrize("family", ["minhash", "ivf", "ivfpq"])
+    def test_rejected_append_writes_nothing(
+        self, spark, documents, embeddings, built_indexes, family, reject
+    ):
+        """A refused append leaves the index byte-for-byte as it was: the
+        recursive listing (paths and sizes) of the index directory is
+        identical before and after the ValueError, for every appendable
+        family and both guards."""
+        import os
+
+        from pyspark.sql import functions as F
+
+        from polars_view_spark.operators.dedup import minhash_append_index
+        from polars_view_spark.operators.similarity import (
+            ivf_append_index,
+            ivfpq_append_index,
+        )
+
+        src, key, append = {
+            "minhash": (documents, "doc_id", minhash_append_index),
+            "ivf": (embeddings, "vec_id", ivf_append_index),
+            "ivfpq": (embeddings, "vec_id", ivfpq_append_index),
+        }[family]
+        fresh = src.filter(F.col(key) % 10 == 5)
+        if reject == "duplicate ids":
+            batch = fresh.unionByName(fresh.limit(1))
+        else:
+            batch = fresh.unionByName(src.filter(F.col(key) % 10 != 5).limit(2))
+        idx = str(built_indexes / family)
+
+        def listing() -> list[tuple[str, int]]:
+            return sorted(
+                (os.path.relpath(os.path.join(d, n), idx), os.path.getsize(os.path.join(d, n)))
+                for d, dirs, files in os.walk(idx)
+                for n in dirs + files
+            )
+
+        before = listing()
+        with pytest.raises(ValueError, match=reject):
+            append(batch, idx)
+        assert listing() == before
+
     def test_daily_crawl_loop_screen_ingest_screen(self, spark, documents, tmp_path):
         """The full daily-crawl loop the persisted index exists for:
         day-1 batch is SCREENED against the corpus index, survivors
@@ -2359,7 +2424,10 @@ class TestFingerprintParityFuzz:
             texts.append(t)
 
         collect()
-        texts = _drop_case_divergent_texts(spark, texts)
+        # the Spark-SQL-unescapable whitespace, pinned: U+000B and U+000C
+        texts = _drop_case_divergent_texts(spark, texts) + [
+            "ab\x0ccd", "\x0b\x0c", "x,\x0c\x0by!"
+        ]
         rows = [(i, t) for i, t in enumerate(texts)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         got = {
@@ -2377,6 +2445,28 @@ class TestFingerprintParityFuzz:
         }
         mism = {d: (got[d], want[d]) for d in want if got[d] != want[d]}
         assert not mism, f"{len(mism)} mismatches, e.g. {list(mism.items())[:3]}"
+
+        # quality_score's punct count (translate over the allowed set)
+        # against the oracle's regexp count of the same class
+        from polars_view_spark.operators.textstats import (
+            _PUNCT_ALLOWED_SQL,
+            PUNCT_REGEX,
+        )
+
+        got_p = {
+            r["doc_id"]: r["p"]
+            for r in docs.selectExpr(
+                "doc_id", f"length(translate(text, '{_PUNCT_ALLOWED_SQL}', '')) AS p"
+            ).collect()
+        }
+        want_p = dict(
+            con.execute(
+                f"SELECT doc_id, len(regexp_extract_all(text, '{PUNCT_REGEX}'))"
+                " FROM docs"
+            ).fetchall()
+        )
+        mism = {d: (got_p[d], want_p[d]) for d in want_p if got_p[d] != want_p[d]}
+        assert not mism, f"punct count: {len(mism)} mismatches, e.g. {list(mism.items())[:3]}"
 
 
 class TestPiiRedactParityFuzz:

@@ -65,3 +65,95 @@ def test_no_ghost_entries_in_operators_md():
         if t not in known
     )
     assert not ghosts, f"OPERATORS.md names unregistered entries: {ghosts}"
+
+
+def _store_decision_sites(pkg_root: str) -> list[str]:
+    """Every site under ``pkg_root`` that makes an on-disk or stream-start
+    decision outside the one place allowed to make it: a Hadoop
+    FileSystem lookup, a dynamic partition overwrite or a one-slice
+    parallelize outside sources/store.py (or the sink start in
+    streaming/events.py), and a foreachBatch or availableNow start
+    outside ``_available_now_sink`` (``run_stream_to_memory``'s memory
+    sink is the one other availableNow start)."""
+    import ast
+
+    def docstrings(tree) -> set[int]:
+        ids = set()
+        for node in ast.walk(tree):
+            if isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            ):
+                body = node.body
+                if (
+                    body
+                    and isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)
+                ):
+                    ids.add(id(body[0].value))
+        return ids
+
+    def kw_is(call, name, value) -> bool:
+        return any(
+            k.arg == name and isinstance(k.value, ast.Constant) and k.value.value is value
+            for k in call.keywords
+        )
+
+    found = []
+    for dirpath, _dirs, files in os.walk(pkg_root):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, os.path.dirname(pkg_root))
+            tree = ast.parse(open(path).read())
+            skip_doc = docstrings(tree)
+
+            def visit(node, owners, rel=rel, skip_doc=skip_doc):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    owners = owners + (node.name,)
+                in_store = rel.endswith(os.path.join("sources", "store.py"))
+                in_sink = "_available_now_sink" in owners
+                where = f"{rel}:{getattr(node, 'lineno', '?')}"
+                if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                    attr = node.func.attr
+                    if attr == "getFileSystem" and not (in_store or in_sink):
+                        found.append(f"{where}: getFileSystem(")
+                    if (
+                        attr == "parallelize"
+                        and kw_is(node, "numSlices", 1)
+                        and not (in_store or in_sink)
+                    ):
+                        found.append(f"{where}: parallelize(numSlices=1)")
+                    if attr == "foreachBatch" and not in_sink:
+                        found.append(f"{where}: foreachBatch(")
+                    if (
+                        attr == "trigger"
+                        and kw_is(node, "availableNow", True)
+                        and not in_sink
+                        and "run_stream_to_memory" not in owners
+                    ):
+                        found.append(f"{where}: trigger(availableNow=True)")
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and "partitionOverwriteMode" in node.value
+                    and id(node) not in skip_doc
+                    and not (in_store or in_sink)
+                ):
+                    found.append(f"{where}: partitionOverwriteMode")
+                for child in ast.iter_child_nodes(node):
+                    visit(child, owners)
+
+            visit(tree, ())
+    return found
+
+
+def test_on_disk_decisions_live_in_the_store():
+    """One-way lint: Hadoop path probes, dynamic partition overwrites,
+    one-slice small frames and availableNow foreachBatch starts each have
+    exactly one implementation (sources/store.py,
+    streaming/events.py:_available_now_sink); a hand-rolled copy anywhere
+    else in the package fails here."""
+    sites = _store_decision_sites(os.path.join(REPO, "polars_view_spark"))
+    assert not sites, "on-disk decisions outside the store:\n" + "\n".join(sites)

@@ -205,7 +205,9 @@ def test_streaming_upsert_matches_sequential_batch_merge(spark, tmp_path):
     """Two change files drained one per micro-batch through the
     foreachBatch MERGE must leave the same snapshot as applying the two
     batches sequentially with the batch merge_upsert — and survive a
-    mid-stream delete + re-insert of the same key."""
+    mid-stream delete + re-insert of the same key.  Holds for a plain
+    path and for a ``file:`` URI (the snapshot probe and swap must
+    resolve the scheme, not ask the local OS)."""
     from polars_view_spark.operators.snapshot import merge_upsert
     from polars_view_spark.streaming.events import streaming_upsert
 
@@ -244,21 +246,22 @@ def test_streaming_upsert_matches_sequential_batch_merge(spark, tmp_path):
     _os.utime(landing / "b1.parquet", (now - 10, now - 10))
     _os.utime(landing / "b2.parquet", (now, now))
 
-    snap = str(tmp_path / "snapshot")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(landing))
-    )
-    streaming_upsert(stream, snap, ["k"], "is_delete").awaitTermination()
-
-    got = sorted(map(tuple, spark.read.parquet(snap).select("k", "s", "v").collect()))
-
     base = spark.createDataFrame(b1, schema).filter("NOT is_delete").drop("is_delete")
     want_df = merge_upsert(base, spark.createDataFrame(b2, schema), ["k"], "is_delete")
     want = sorted(map(tuple, want_df.select("k", "s", "v").collect()))
-    assert got == want, (got, want)
-    assert [r[0] for r in got] == [1, 2, 4]
+    assert [r[0] for r in want] == [1, 2, 4]
+
+    for snap in (str(tmp_path / "snapshot"), "file://" + str(tmp_path / "snap_uri")):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(landing))
+        )
+        streaming_upsert(stream, snap, ["k"], "is_delete").awaitTermination()
+        got = sorted(
+            map(tuple, spark.read.parquet(snap).select("k", "s", "v").collect())
+        )
+        assert got == want, (snap, got, want)
 
 
 def test_scan_operators_run_on_the_ingest_stream(spark):
@@ -399,6 +402,18 @@ def test_streaming_minhash_dedup_matches_batch(spark, tmp_path):
         got2, sorted(want)
     )
     assert spark.read.parquet(str(tmp_path / "corpus")).count() == docs.count()
+
+    # the same drain with file: URI sinks: the corpus-state probe must
+    # resolve the scheme, or every batch pairs against an empty corpus
+    # and the cross-batch pairs are silently lost
+    uri = "file://" + str(tmp_path)
+    q3 = streaming_minhash_dedup(stream, uri + "/corpus_uri", uri + "/pairs_uri")
+    assert q3.awaitTermination(300), "URI drain did not finish in time"
+    got3 = sorted(
+        (r["doc1"], r["doc2"], r["jaccard"])
+        for r in spark.read.parquet(uri + "/pairs_uri").collect()
+    )
+    assert got3 == sorted(want), "file: URI sinks: " + _pair_diff(got3, sorted(want))
 
 
 def test_streaming_containment_screen_matches_batch(spark, tmp_path):
