@@ -138,6 +138,21 @@ DRIFT_CONTROL_SQL = (
 )
 
 
+def _warm_up(cat, spark, name: str, warm_dir: str) -> None:
+    """Run one entry untimed on ``warm_dir``.  A failed warm-up leaves only
+    the timed run cold, so it is reported on stderr (stdout carries the
+    one JSON line) and the bench goes on."""
+    try:
+        cat[name].spark_fn(spark, warm_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    except Exception as e:
+        print(
+            f"bench: warm-up of {name} on {warm_dir} failed: {type(e).__name__}: {e}",
+            file=sys.stderr,
+        )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -157,16 +172,13 @@ def main() -> None:
         prefixes = [p for p in only.split(",") if p]
         names = [n for n in names if any(n.startswith(p) for p in prefixes)]
 
-    # JVM/session warm-up on the smallest SF so the timed queries do not
-    # pay classloading/codegen costs that a long-lived cluster never sees;
-    # each headline query is warmed so its generated code is JIT'd.
+    # JVM/session warm-up on the smallest SF (a sibling of sf_dir) so the
+    # timed queries do not pay classloading/codegen costs that a long-lived
+    # cluster never sees; each headline query is warmed so its generated
+    # code is JIT'd.
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     for name in names:
-        try:
-            cat[name].spark_fn(spark, "/root/testdata/sf0.001").write.format(
-                "noop"
-            ).mode("overwrite").save()
-        except Exception:
-            pass
+        _warm_up(cat, spark, name, warm_dir)
 
     import duckdb
 
@@ -357,12 +369,7 @@ def main() -> None:
         for name in STREAMING:
             if name not in cat:
                 continue
-            try:
-                cat[name].spark_fn(spark, "/root/testdata/sf0.001").write.format(
-                    "noop"
-                ).mode("overwrite").save()
-            except Exception:
-                pass
+            _warm_up(cat, spark, name, warm_dir)
             s_runs = []
             for _ in range(2):
                 t0 = time.perf_counter()

@@ -756,6 +756,7 @@ def _t_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id % 3 != 0 plus one __quarantine__ row counting the rest."""
     import os
 
+    from polars_view_spark import fills
     from polars_view_spark.sources.readers import read_ndjson_quarantine
 
     t = load_tables(spark, sf_dir, "documents")
@@ -770,22 +771,20 @@ def _t_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("value")
     )
     lines.write.mode("overwrite").text(path)
-    clean, quarantine, parsed = read_ndjson_quarantine(
-        spark, path, "doc_id BIGINT, lang STRING, n_chars BIGINT"
-    )
-    per_lang = clean.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_chars").cast("long").alias("chars")
-    )
-    q_row = quarantine.agg(
-        F.lit("__quarantine__").alias("lang"),
-        F.count(F.lit(1)).alias("n"),
-        F.lit(None).cast("long").alias("chars"),
-    )
-    # pin the small result, then release the parse cache — same scoped-
-    # cache discipline as the dedup operators
-    out = per_lang.unionByName(q_row).orderBy("lang").localCheckpoint(eager=True)
-    parsed.unpersist()
-    return out
+    with fills.scope() as own:
+        clean, quarantine, parsed = read_ndjson_quarantine(
+            spark, path, "doc_id BIGINT, lang STRING, n_chars BIGINT"
+        )
+        own(parsed)
+        per_lang = clean.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("n_chars").cast("long").alias("chars")
+        )
+        q_row = quarantine.agg(
+            F.lit("__quarantine__").alias("lang"),
+            F.count(F.lit(1)).alias("n"),
+            F.lit(None).cast("long").alias("chars"),
+        )
+        return own.result(per_lang.unionByName(q_row).orderBy("lang"))
 
 
 _core_done = False

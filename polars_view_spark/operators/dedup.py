@@ -23,20 +23,9 @@ Everything is expressed with JVM-side ``F.expr`` chains built from
 functions/texthash.py so the DuckDB oracles (catalog_ext.py) replicate the
 exact arithmetic.
 
-``localCheckpoint`` lifecycle note (ADVICE r10): checkpointed
-intermediates that are not explicitly unpersisted (``sigs`` in the
-incremental/append paths, blocked shingles in ``ngram_jaccard_pairs``)
-are released when the driver GCs the RDD reference and the
-ContextCleaner runs — deterministic-enough for the repeated-call
-patterns the tests exercise, but a long-lived driver hammering these
-operators inherits that latency; the eagerly-pinned RESULT checkpoints
-are tiny (surviving pairs only).  Fault-tolerance trade-off, also by
-design: a local checkpoint truncates lineage, so an executor loss
-mid-job fails the query instead of recomputing — acceptable in the
-single-JVM driver environment; a cluster deployment that needs
-mid-query executor-loss recovery should swap the corpus-scale
-checkpoints (NOT the exchange-reuse-critical batch-side ones) for
-``reliableCheckpoint`` or accept the retry.
+Every cache an operator fills for itself, and the choice between
+``cache`` and ``localCheckpoint`` (eager or lazy) at each site, follows
+fills.py; the comments below keep only what is particular to a site.
 """
 
 from __future__ import annotations
@@ -53,6 +42,7 @@ from polars_view_spark.functions.texthash import (
     shingles_expr,
     tokens_expr,
 )
+from polars_view_spark import fills
 from polars_view_spark.sources import store
 
 
@@ -200,8 +190,8 @@ def minhash_lsh_pairs(
 
     ``shingles`` lets a caller share one cached shingle table across
     several consumers (see :func:`dedup_eval` — shingling is ~60 % of
-    this operator's cost); ownership stays with the caller, which must
-    cache before and unpersist after.
+    this operator's cost); the caller caches it and its scope releases it
+    (fills.py).
 
     Returns ``(doc1, doc2, jaccard)`` with doc1 < doc2 and exact shingle
     Jaccard ≥ threshold.
@@ -223,9 +213,7 @@ def minhash_lsh_pairs(
     here peaks at bucket size 15 (sf0.1), far under the default 64.
 
     The intermediate caches (shingles, signatures, candidates) are scoped
-    to this call: the verified result is eagerly pinned (it is tiny — only
-    the surviving pairs) and the inputs are unpersisted before returning,
-    so repeated invocations don't accumulate executor storage.
+    to this call (fills.py): only the tiny verified result outlives it.
 
     Measured floor (sf0.1, 5 000 docs, local[32], r03 per-stage sweep):
     ~2.4 s median, of which shingle tokenize+explode+md5 ≈ 60 % (260 k
@@ -242,58 +230,47 @@ def minhash_lsh_pairs(
     (explode → one groupBy → bucket join → candidate-only verify) is the
     one that holds at 100×.
     """
-    own_sh = shingles is None
-    sh = shingle_table(df, id_col, text_col).cache() if own_sh else shingles
-    # cache(), deliberately NOT localCheckpoint: an eager checkpoint here
-    # WOULD let AQE reuse the band exchange across the self-join's two
-    # sides (a cache's InMemoryTableScan defeats the reuse
-    # canonicalization), and it measured ~1 s faster at sf0.1 — but the
-    # checkpoint's own job serializes the full shingle+minhash aggregate
-    # into a standalone barrier that no longer pipelines into the
-    # candidates job, and on the 10× instance that barrier costs far more
-    # than the reuse saves: interleaved entry A/B measured 24.5–28.6 s
-    # checkpointed vs 15.1–17.5 s cached (3 rounds each).  The cache
-    # already deduplicates the EXPENSIVE half (the 64-minimum aggregate
-    # runs once); only the cheap reshape+window+exchange evaluates per
-    # side.  Contrast minhash_query_index, where the checkpointed frame
-    # is the BATCH-side aggregate (small at any scale) and the reuse
-    # saves a corpus-side union+window — there the same trade wins at
-    # both scales and the checkpoint stays.
-    sigs = minhash_signatures(df, id_col, text_col, shingles=sh).cache()
-    bands = _band_table(sigs, max_bucket_size)
+    with fills.scope() as own:
+        sh = shingles
+        if sh is None:
+            sh = own(shingle_table(df, id_col, text_col).cache())
+        # cache(), NOT localCheckpoint, although a checkpoint would let
+        # AQE reuse the band exchange across the self-join's two sides
+        # (~1 s faster at sf0.1): its standalone barrier no longer
+        # pipelines into the candidates job, and at 10× that costs far
+        # more than the reuse saves — interleaved entry A/B measured
+        # 24.5–28.6 s checkpointed vs 15.1–17.5 s cached (3 rounds each).
+        # The cache already runs the expensive 64-minimum aggregate once;
+        # only the cheap reshape+window+exchange evaluates per side.
+        # Contrast minhash_query_index, where the checkpointed frame is the
+        # small batch-side aggregate and the checkpoint wins at both scales.
+        sigs = own(minhash_signatures(df, id_col, text_col, shingles=sh).cache())
+        bands = _band_table(sigs, max_bucket_size)
 
-    left = bands.alias("l")
-    right = bands.alias("r")
-    join_cond = (F.col("l.band") == F.col("r.band")) & (F.col("l.doc") < F.col("r.doc"))
-    for r in range(MINHASH_BAND_ROWS):
-        join_cond = join_cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
-    candidates = (
-        # MERGE hint: a broadcast build side re-runs the band reshape +
-        # cap window (a second shuffle of the band table) because a
-        # BroadcastExchange can never reuse the probe side's shuffle —
-        # and a corpus-scale band table could never broadcast anyway, so
-        # sort-merge is the only join that exists at 100 TB.  (Note: with
-        # sigs CACHED, the two sort-merge sides do NOT collapse into one
-        # ReusedExchange — an InMemoryTableScan defeats AQE's reuse
-        # canonicalization, r10 finding — but both sides' reshape reads
-        # the cache, so only the cheap reshape+window+exchange evaluates
-        # per side, never the minhash aggregate.)
-        left.join(right.hint("merge"), join_cond)
-        .select(F.col("l.doc").alias("doc1"), F.col("r.doc").alias("doc2"))
-        .distinct()
-        .cache()  # reused by intersection + left-join in the verify stage
-    )
+        left = bands.alias("l")
+        right = bands.alias("r")
+        join_cond = (F.col("l.band") == F.col("r.band")) & (
+            F.col("l.doc") < F.col("r.doc")
+        )
+        for r in range(MINHASH_BAND_ROWS):
+            join_cond = join_cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
+        # MERGE hint: a broadcast build side re-runs the band reshape + cap
+        # window (a second shuffle of the band table) because a
+        # BroadcastExchange can never reuse the probe side's shuffle — and
+        # a corpus-scale band table could never broadcast anyway
+        candidates = own(
+            left.join(right.hint("merge"), join_cond)
+            .select(F.col("l.doc").alias("doc1"), F.col("r.doc").alias("doc2"))
+            .distinct()
+            .cache()  # read by the intersection and the left join of the verify
+        )
 
-    verified = exact_jaccard_for_pairs(df, candidates, id_col, text_col, shingles=sh)
-    result = verified.filter(F.col("jaccard") >= jaccard_threshold).select(
-        "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
-    )
-    # pin the (tiny) result, then release the big intermediates (a
-    # caller-provided shingle table is the caller's to release)
-    result = result.localCheckpoint(eager=True)
-    for c in (candidates, sigs) + ((sh,) if own_sh else ()):
-        c.unpersist()
-    return result
+        verified = exact_jaccard_for_pairs(candidates, sh)
+        return own.result(
+            verified.filter(F.col("jaccard") >= jaccard_threshold).select(
+                "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
+            )
+        )
 
 
 def minhash_lsh_pairs_incremental(
@@ -318,53 +295,48 @@ def minhash_lsh_pairs_incremental(
     oracle states it.
     """
     full = base.unionByName(new)
-    sh = shingle_table(full, id_col, text_col).cache()
-    # localCheckpoint, NOT cache() — enables exchange reuse across the two
-    # band-table consumers of the merge join below (see minhash_lsh_pairs)
-    sigs = minhash_signatures(full, id_col, text_col, shingles=sh).localCheckpoint(
-        eager=True
-    )
-    bands = _band_table(sigs, max_bucket_size)
+    with fills.scope() as own:
+        sh = own(shingle_table(full, id_col, text_col).cache())
+        # localCheckpoint: the two band-table sides of the merge join below
+        # reuse one exchange (fills.py)
+        sigs = minhash_signatures(
+            full, id_col, text_col, shingles=sh
+        ).localCheckpoint(eager=True)
+        bands = _band_table(sigs, max_bucket_size)
 
-    new_ids = new.select(F.col(id_col).alias("doc"))
-    bands_new = bands.join(F.broadcast(new_ids), "doc")
+        new_ids = new.select(F.col(id_col).alias("doc"))
+        bands_new = bands.join(F.broadcast(new_ids), "doc")
 
-    left = bands_new.alias("l")
-    right = bands.alias("r")
-    cond = (F.col("l.band") == F.col("r.band")) & (F.col("l.doc") != F.col("r.doc"))
-    for r in range(MINHASH_BAND_ROWS):
-        cond = cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
-    candidates = (
-        # MERGE hint, same rationale as minhash_lsh_pairs: both sides derive
-        # from the SAME band-table subtree (the batch side only adds a
-        # broadcast id join AFTER the cap window), and a BroadcastExchange
-        # of either side re-runs that subtree — a second full pass over the
-        # corpus band rows — because a broadcast can never reuse the probe
-        # side's shuffle.  Sort-merge keys on the cap window's band-key
-        # hashpartitioning, so the window exchange is computed once and
-        # ReusedExchange feeds the other side; the window's partition-key
-        # sort already satisfies the merge ordering, so no extra sort is
-        # paid either.  At corpus scale the batch side's subtree STILL
-        # contains the corpus-wide union+window, so broadcasting it would
-        # cost a full corpus pass — merge is the only shape that scans the
-        # corpus once.
-        left.join(right.hint("merge"), cond)
-        .select(
-            F.least(F.col("l.doc"), F.col("r.doc")).alias("doc1"),
-            F.greatest(F.col("l.doc"), F.col("r.doc")).alias("doc2"),
+        left = bands_new.alias("l")
+        right = bands.alias("r")
+        cond = (F.col("l.band") == F.col("r.band")) & (
+            F.col("l.doc") != F.col("r.doc")
         )
-        .distinct()
-        .cache()
-    )
+        for r in range(MINHASH_BAND_ROWS):
+            cond = cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
+        # MERGE hint: both sides derive from the SAME band-table subtree (the
+        # batch side only adds a broadcast id join AFTER the cap window), and
+        # a BroadcastExchange of either side would re-run that subtree — a
+        # second full pass over the corpus band rows.  Sort-merge keys on the
+        # cap window's band-key hashpartitioning, so the window exchange is
+        # computed once and ReusedExchange feeds the other side; the window's
+        # partition-key sort already satisfies the merge ordering.
+        candidates = own(
+            left.join(right.hint("merge"), cond)
+            .select(
+                F.least(F.col("l.doc"), F.col("r.doc")).alias("doc1"),
+                F.greatest(F.col("l.doc"), F.col("r.doc")).alias("doc2"),
+            )
+            .distinct()
+            .cache()
+        )
 
-    verified = exact_jaccard_for_pairs(full, candidates, id_col, text_col, shingles=sh)
-    result = verified.filter(F.col("jaccard") >= jaccard_threshold).select(
-        "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
-    )
-    result = result.localCheckpoint(eager=True)
-    for c in (candidates, sh):
-        c.unpersist()
-    return result
+        verified = exact_jaccard_for_pairs(candidates, sh)
+        return own.result(
+            verified.filter(F.col("jaccard") >= jaccard_threshold).select(
+                "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
+            )
+        )
 
 
 def minhash_build_index(
@@ -414,13 +386,12 @@ def minhash_build_index(
     the ``bands`` append entirely is NOT safe: lookup-mode candidates
     come exclusively from it, so absent rows silently lose recall.
     """
-    sh = shingle_table(corpus, id_col, text_col).cache()
-    # sigs cached too: TWO writes consume it (signatures, bands), and
-    # without the pin the bands write re-runs the k-minimum aggregate
-    # over the full shingle stream — the most expensive reduction in the
-    # build — instead of re-reading kilobytes of signature rows.
-    sigs = minhash_signatures(corpus, id_col, text_col, shingles=sh).cache()
-    try:
+    with fills.scope() as own:
+        sh = own(shingle_table(corpus, id_col, text_col).cache())
+        # sigs cached too: without it the bands write re-runs the k-minimum
+        # aggregate over the full shingle stream — the most expensive
+        # reduction in the build — instead of re-reading signature rows.
+        sigs = own(minhash_signatures(corpus, id_col, text_col, shingles=sh).cache())
         # The first write (signatures) runs ALONE: it is the job that
         # fills the shingle and signature caches, and racing the other
         # writes against it would tokenize the corpus 2-4x concurrently
@@ -455,11 +426,6 @@ def minhash_build_index(
             ]
             for fut in futures:
                 fut.result()  # re-raise the first failure
-    finally:
-        # release even when a write throws — retries must not accumulate
-        # pinned copies of the (3× corpus text) shingle cache
-        sh.unpersist()
-        sigs.unpersist()
 
 
 def minhash_append_index(
@@ -506,8 +472,8 @@ def minhash_append_index(
     store.guard_append(
         "minhash_append_index", new_docs, id_col, f"{path}/signatures", "doc"
     )
-    sh = shingle_table(new_docs, id_col, text_col).cache()
-    try:
+    with fills.scope() as own:
+        sh = own(shingle_table(new_docs, id_col, text_col).cache())
         sigs = minhash_signatures(
             new_docs, id_col, text_col, shingles=sh
         ).localCheckpoint(eager=True)
@@ -567,8 +533,6 @@ def minhash_append_index(
             .write.mode("append")
             .parquet(f"{path}/bands")
         )
-    finally:
-        sh.unpersist()
 
 
 def minhash_refresh_bands(spark, path: str) -> None:
@@ -599,7 +563,6 @@ def minhash_query_index(
     text_col: str = "text",
     jaccard_threshold: float = 0.5,
     max_bucket_size: int = MAX_LSH_BUCKET,
-    materialize: bool = True,
     include_batch_pairs: bool = True,
 ) -> DataFrame:
     """Pair a NEW batch against a persisted MinHash index
@@ -621,11 +584,6 @@ def minhash_query_index(
     nothing about the query side scales with corpus CPU, only with its
     (columnar, pruned-to-``doc, shingle``) bytes.
 
-    ``materialize=False`` skips the eager result checkpoint (which
-    truncates lineage to ``Scan ExistingRDD`` and blinds plan-gate
-    tests) and leaves the intermediate caches to the caller — same
-    contract as ``dsir_weights``.
-
     ``include_batch_pairs=False`` switches to the BATCH-INVARIANT
     lookup the streaming wrapper needs
     (streaming/events.py:streaming_minhash_lookup): only
@@ -639,28 +597,19 @@ def minhash_query_index(
     """
     corpus_sh = spark.read.parquet(f"{path}/shingles")
 
-    new_sh = shingle_table(new, id_col, text_col).cache()
-    candidates = None
-    # localCheckpoint, deliberately NOT cache(): (a) uncheckpointed, every
-    # band branch re-runs the batch's minhash aggregate (n_bands ×
-    # consuming-subtree copies of the same Exchange+HashAggregate — the
-    # dominant query-side cost in the r10 idle-box profile); (b) a cache()
-    # would also run it once, BUT the InMemoryTableScan it plants inside
-    # the band-table subtree defeats AQE's exchange-reuse canonicalization,
-    # so the union+cap-window shuffle would still compute twice (measured:
-    # ReusedExchange absent with cache, present with checkpoint — the
-    # ExistingRDD leaf canonicalizes equal on both join sides).  The
-    # checkpointed frame is one row per batch doc — kilobytes.
-    # eager=False (r11): the plan leaf (LogicalRDD) — which is what the
-    # exchange-reuse canonicalization needs — exists at planning time
-    # either way; lazy materialization folds the batch aggregate into the
-    # result job instead of paying a standalone job barrier per query
-    # (measured −0.3 s/query at sf0.1, ReusedExchange gate still green).
-    new_sigs = minhash_signatures(new, id_col, text_col, shingles=new_sh).localCheckpoint(
-        eager=False
-    )
-    all_sh = None
-    try:
+    with fills.scope() as own:
+        new_sh = own(shingle_table(new, id_col, text_col).cache())
+        # localCheckpoint, not cache(): uncheckpointed, every band branch
+        # re-runs the batch's minhash aggregate (the dominant query-side
+        # cost in the r10 idle-box profile), and a cache would leave the
+        # union+cap-window shuffle computing twice (measured: ReusedExchange
+        # absent with cache, present with checkpoint).  The frame is one row
+        # per batch doc.  eager=False (r11): the LogicalRDD leaf exists at
+        # planning time either way, and folding the batch aggregate into the
+        # result job measured −0.3 s/query at sf0.1.
+        new_sigs = minhash_signatures(
+            new, id_col, text_col, shingles=new_sh
+        ).localCheckpoint(eager=False)
         if include_batch_pairs:
             # same union the self-contained incremental path computes from
             # scratch — per-doc rows are identical, so downstream is identical
@@ -704,7 +653,7 @@ def minhash_query_index(
         )
         for r in range(MINHASH_BAND_ROWS):
             cond = cond & (F.col(f"l.v{r}") == F.col(f"r.v{r}"))
-        candidates = (
+        candidates = own(
             left.join(right, cond)
             .select(
                 F.least(F.col("l.doc"), F.col("r.doc")).alias("doc1"),
@@ -717,71 +666,43 @@ def minhash_query_index(
         # verify touches only candidate docs: semi-join the shingle
         # streams to the (small, broadcast) candidate id set.  The
         # semi-join is DOC-level, so every admitted doc keeps its COMPLETE
-        # shingle set — which makes the Jaccard denominators derivable
-        # from this same bounded frame (exact_jaccard_for_pairs' default
-        # sizes aggregate), so the index keeps no per-doc sizes dataset
-        # (it is neither written nor read).  NO corpus-wide aggregate runs
-        # at query time (the default aggregate sees candidate docs only),
-        # keeping the O(|new|) CPU claim honest.
+        # shingle set and the Jaccard denominators come from this same
+        # bounded frame — the index keeps no per-doc sizes dataset, and
+        # no corpus-wide aggregate runs at query time, keeping the
+        # O(|new|) CPU claim honest.
         cand_docs = (
             candidates.select(F.col("doc1").alias("doc"))
             .unionByName(candidates.select(F.col("doc2").alias("doc")))
             .distinct()
         )
-        # cached: exact_jaccard_for_pairs consumes the shingle table three
-        # times (both join sides of the intersection count + the sizes
-        # aggregate) — uncached, the corpus-shingles parquet scan +
-        # semi-join would run per consumer.  Bounded: only candidate
-        # docs' shingles survive the semi-join.
-        all_sh = (
+        # cached: the verify reads the shingle table three times (both join
+        # sides of the intersection count + the sizes aggregate) —
+        # uncached, the corpus-shingles scan + semi-join would run per
+        # consumer.  Bounded: only candidate docs' shingles survive.
+        all_sh = own(
             corpus_sh.unionByName(new_sh)
             .join(F.broadcast(cand_docs), "doc", "left_semi")
             .cache()
         )
-        # first arg is unused when a shingle table is supplied
-        verified = exact_jaccard_for_pairs(
-            new, candidates, id_col, text_col, shingles=all_sh
+        verified = exact_jaccard_for_pairs(candidates, all_sh)
+        return own.result(
+            verified.filter(F.col("jaccard") >= jaccard_threshold).select(
+                "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
+            )
         )
-        result = verified.filter(F.col("jaccard") >= jaccard_threshold).select(
-            "doc1", "doc2", F.round("jaccard", 6).alias("jaccard")
-        )
-        if materialize:
-            result = result.localCheckpoint(eager=True)
-        return result
-    finally:
-        if materialize:
-            if candidates is not None:
-                candidates.unpersist()
-            if all_sh is not None:
-                all_sh.unpersist()
-            new_sh.unpersist()
 
 
-def exact_jaccard_for_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingles: DataFrame | None = None,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Exact shingle Jaccard for given (doc1, doc2) pairs.
+def exact_jaccard_for_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """Exact shingle Jaccard for given (doc1, doc2) pairs over the
+    ``(doc, shingle)`` table ``sh``, which must hold every shingle of each
+    doc a pair names (the set sizes are counted from it).
 
     Intersection via a 3-way hash join on the exploded shingle table;
-    set sizes via one small aggregate broadcast back.  No list materialization
-    on the driver.
-
-    ``sizes`` (a ``(doc, sz)`` table of FULL per-doc shingle counts) lets
-    an index-backed caller supply precomputed counts — the shingle input
-    may then be pre-filtered to candidate docs without corrupting the
-    Jaccard denominator, and no corpus-wide aggregate runs here.
+    set sizes via one small aggregate joined back.  No list
+    materialization on the driver.  ``sh`` is read three times, so
+    callers pass a cached table.
     """
-    # the shingle table feeds three consumers (both join sides + sizes) —
-    # cache it so the tokenize+shingle scan runs once; callers that already
-    # hold a cached copy pass it in
-    sh = shingles if shingles is not None else shingle_table(df, id_col, text_col).cache()
-    if sizes is None:
-        sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
+    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
 
     sh1 = sh.select(F.col("doc").alias("doc1"), F.col("shingle"))
     sh2 = sh.select(F.col("doc").alias("doc2"), F.col("shingle"))
@@ -818,9 +739,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact-Jaccard near-dup pairs within blocking buckets.
 
-    ``shingles`` shares a caller-owned cached shingle table (the caller
-    caches/unpersists it); the block-joined copy this operator derives
-    is still materialized (checkpointed) locally.
+    ``shingles`` shares a caller-owned cached shingle table; the
+    block-joined copy this operator derives is still checkpointed
+    locally.
 
     ``block_cols`` bound which docs may pair (same block only) — the
     baseline against which the LSH path is validated.
@@ -842,13 +763,9 @@ def ngram_jaccard_pairs(
                          "(zero-intersection pairs are pruned by design)")
     blocks = df.select(F.col(id_col).alias("doc"), *[F.col(c) for c in block_cols])
     base_sh = shingle_table(df, id_col, text_col) if shingles is None else shingles
-    # localCheckpoint, NOT cache(): the blocked shingle table feeds BOTH
-    # sides of the intersection self-join below, and both sides shuffle by
-    # the same (shingle, block) keys — over an ExistingRDD leaf the two
-    # exchanges canonicalize equal and AQE computes ONE shuffle
-    # (ReusedExchange), where a cache()'s InMemoryTableScan defeats that
-    # canonicalization and the shingle stream is shuffled twice (same
-    # finding as minhash_lsh_pairs, r10).
+    # localCheckpoint: both sides of the intersection self-join below
+    # shuffle the blocked shingle table by the same (shingle, block) keys,
+    # and reuse that one exchange (fills.py)
     sh = base_sh.join(blocks, "doc").localCheckpoint(eager=True)
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
 
@@ -873,9 +790,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc1", "doc2", F.round("jaccard", 6).alias("jaccard"))
     )
-    # same discipline as minhash_lsh_pairs: eagerly pin the (tiny)
-    # surviving-pairs result (the blocked-shingle checkpoint is released
-    # when its RDD goes out of scope)
     return out.localCheckpoint(eager=True)
 
 
@@ -909,16 +823,16 @@ def dedup_eval(
     join + aggregate.
     """
     blocks = block_cols if block_cols is not None else ["lang"]
-    sh = shingle_table(df, id_col, text_col).cache()
-    truth = ngram_jaccard_pairs(
-        df, id_col, text_col, blocks, threshold, shingles=sh
-    ).select("doc1", "doc2", F.lit(1).alias("in_t"))
-    pred = minhash_lsh_pairs(df, id_col, text_col, threshold, shingles=sh).select(
-        "doc1", "doc2", F.lit(1).alias("in_p")
-    )
-    # both components eagerly checkpoint their (tiny) results, so the
-    # shared shingle cache is no longer needed past this point
-    sh.unpersist()
+    # both components pin their (tiny) results, so the shared shingle
+    # cache is not needed past this block
+    with fills.scope() as own:
+        sh = own(shingle_table(df, id_col, text_col).cache())
+        truth = ngram_jaccard_pairs(
+            df, id_col, text_col, blocks, threshold, shingles=sh
+        ).select("doc1", "doc2", F.lit(1).alias("in_t"))
+        pred = minhash_lsh_pairs(
+            df, id_col, text_col, threshold, shingles=sh
+        ).select("doc1", "doc2", F.lit(1).alias("in_p"))
     joined = truth.join(pred, ["doc1", "doc2"], "full").select(
         F.coalesce("in_t", F.lit(0)).alias("t"),
         F.coalesce("in_p", F.lit(0)).alias("p"),
@@ -1091,13 +1005,9 @@ def connected_components(
     diameter) round count is exactly what makes the operator viable
     there.
     """
-    # eager=False (r11): the init-labels checkpoint below is the frame's
-    # first (and only) materializing consumer, so the lazy checkpoint
-    # folds the edge union into that job instead of paying a standalone
-    # barrier — safe because exactly ONE stage reads the RDD before its
-    # blocks exist (contrast `stepped`, which stays eager: its self-join
-    # reads it from two concurrent stages, and lazy persistence would
-    # compute the edge-join subtree twice at corpus scale).
+    # eager=False (r11): the init-labels checkpoint below is the ONE stage
+    # that reads it before its blocks exist (fills.py); `stepped` stays
+    # eager, its self-join reads it from two concurrent stages
     edges = (
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .union(
@@ -1434,22 +1344,21 @@ def doc_containment_pairs(
         max_bucket_size = min(
             max(MAX_LSH_BUCKET, df.count() // 10), CONTAINMENT_JOIN_CAP
         )
-    fps = winnow_fingerprints(df, id_col, text_col).persist()
-    freq = fps.groupBy("fingerprint").agg(
-        F.count(F.lit(1)).cast("long").alias("__freq")
-    )
-    # kept is BOTH sides of the verdicts (signature window + outer join
-    # side); checkpointed so the freq aggregate and the admissibility
-    # join run once, not once per side (alternating A/B at sf0.1: wins
-    # both orderings, result hash identical — r10)
-    kept = fps.join(
-        freq.filter(F.col("__freq") <= max_bucket_size), "fingerprint"
-    ).localCheckpoint(eager=True)
-    result = _containment_verdicts(
-        kept, kept, min_share_pct, "inner_doc", "outer_doc"
-    ).localCheckpoint(eager=True)
-    fps.unpersist()
-    return result
+    with fills.scope() as own:
+        fps = own(winnow_fingerprints(df, id_col, text_col).cache())
+        freq = fps.groupBy("fingerprint").agg(
+            F.count(F.lit(1)).cast("long").alias("__freq")
+        )
+        # kept is BOTH sides of the verdicts (signature window + outer join
+        # side); checkpointed so the freq aggregate and the admissibility
+        # join run once, not once per side (alternating A/B at sf0.1: wins
+        # both orderings, result hash identical — r10)
+        kept = fps.join(
+            freq.filter(F.col("__freq") <= max_bucket_size), "fingerprint"
+        ).localCheckpoint(eager=True)
+        return own.result(
+            _containment_verdicts(kept, kept, min_share_pct, "inner_doc", "outer_doc")
+        )
 
 
 def _containment_verdicts(
@@ -1528,35 +1437,38 @@ def containment_corpus_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket_size: int | None = None,
+    *,
+    own: fills.scope,
 ) -> tuple[DataFrame, DataFrame, int]:
     """The corpus-side half of :func:`doc_containment_screen`, split out
     so repeated screeners (the streaming wrapper, any per-batch caller)
     compute it ONCE: ``(kept, freq, cap)`` where ``kept`` is the
     admissible ``(id, fingerprint, __freq)`` outer-side table, ``freq``
     the full fingerprint→frequency map, and ``cap`` the derived
-    admissibility bound.  Both frames are PERSISTED and eagerly pinned
-    (the fingerprint fan-out feeds differently-partitioned consumers
-    with no exchange reuse — the measured 63 s → 11 s trap, SCALE.md);
-    the caller owns their lifecycle via ``kept.unpersist()`` /
-    ``freq.unpersist()`` when screening ends."""
+    admissibility bound.  Both frames are cached, filled before the
+    return, and registered with the caller's scope ``own`` (the
+    fingerprint fan-out feeds differently-partitioned consumers with no
+    exchange reuse — the measured 63 s → 11 s trap, SCALE.md)."""
     from polars_view_spark.operators.textstats import winnow_fingerprints
 
     if max_bucket_size is None:
         max_bucket_size = min(
             max(MAX_LSH_BUCKET, corpus.count() // 10), CONTAINMENT_JOIN_CAP
         )
-    fps = winnow_fingerprints(corpus, id_col, text_col).persist()
-    freq = (
-        fps.groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).cast("long").alias("__freq"))
-        .persist()
-    )
-    kept = fps.join(
-        freq.filter(F.col("__freq") <= max_bucket_size), "fingerprint"
-    ).persist()
-    freq.count()
-    kept.count()
-    fps.unpersist()
+    with fills.scope() as own_fps:
+        fps = own_fps(winnow_fingerprints(corpus, id_col, text_col).cache())
+        freq = own(
+            fps.groupBy("fingerprint")
+            .agg(F.count(F.lit(1)).cast("long").alias("__freq"))
+            .cache()
+        )
+        kept = own(
+            fps.join(
+                freq.filter(F.col("__freq") <= max_bucket_size), "fingerprint"
+            ).cache()
+        )
+        freq.count()
+        kept.count()
     return kept, freq, max_bucket_size
 
 
@@ -1591,18 +1503,15 @@ def containment_build_index(
     schedule instead; between rebuilds the screen keeps its exact
     as-of-build semantics.
     """
-    kept, freq, cap = containment_corpus_stats(
-        corpus, id_col, text_col, max_bucket_size
-    )
-    try:
+    with fills.scope() as own:
+        kept, freq, cap = containment_corpus_stats(
+            corpus, id_col, text_col, max_bucket_size, own=own
+        )
         kept.write.mode("overwrite").parquet(f"{path}/kept")
         freq.write.mode("overwrite").parquet(f"{path}/freq")
         store.small_frame(
             corpus.sparkSession, [(int(cap),)], "cap long"
         ).write.mode("overwrite").parquet(f"{path}/meta")
-    finally:
-        kept.unpersist()
-        freq.unpersist()
 
 
 def containment_load_stats(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
@@ -1610,8 +1519,8 @@ def containment_load_stats(spark, path: str) -> tuple[DataFrame, DataFrame, int]
     (:func:`containment_build_index`) in the exact shape
     ``doc_containment_screen``'s ``corpus_stats`` parameter and the
     streaming wrapper expect: ``(kept, freq, cap)``.  The frames are
-    plain parquet scans (columnar, filter-pushdown-friendly) — callers'
-    ``unpersist()`` lifecycle calls are harmless no-ops on them."""
+    plain parquet scans (columnar, filter-pushdown-friendly), so nothing
+    needs releasing."""
     cap = spark.read.parquet(f"{path}/meta").collect()[0]["cap"]
     return (
         spark.read.parquet(f"{path}/kept"),
@@ -1662,28 +1571,23 @@ def doc_containment_screen(
     """
     from polars_view_spark.operators.textstats import winnow_fingerprints
 
-    owns_stats = corpus_stats is None
-    if owns_stats:
-        corpus_stats = containment_corpus_stats(
-            corpus, id_col, text_col, max_bucket_size
-        )
-    kept, freq, cap = corpus_stats
-    try:
+    with fills.scope() as own:
+        if corpus_stats is None:
+            corpus_stats = containment_corpus_stats(
+                corpus, id_col, text_col, max_bucket_size, own=own
+            )
+        kept, freq, cap = corpus_stats
         a_fps = (
             winnow_fingerprints(arrivals, id_col, text_col)
             .join(freq, "fingerprint", "left")
             .withColumn("__freq", F.coalesce(F.col("__freq"), F.lit(0)))
             .filter(F.col("__freq") <= cap)
         )
-        return _containment_verdicts(
-            a_fps, kept, min_share_pct, "arrival_doc", "corpus_doc"
-        ).localCheckpoint(eager=True)
-    finally:
-        # release even when the verdict join / checkpoint throws — the
-        # stats are this call's cache entries only when it created them
-        if owns_stats:
-            kept.unpersist()
-            freq.unpersist()
+        return own.result(
+            _containment_verdicts(
+                a_fps, kept, min_share_pct, "arrival_doc", "corpus_doc"
+            )
+        )
 
 
 #: Fixed chunk width (words) for duplicated-span removal.

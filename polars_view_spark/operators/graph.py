@@ -57,11 +57,8 @@ def pagerank(
     Returns ``(v, rank)`` with rank in micro-units.
     """
     w = F.col(weight_col) if weight_col else F.lit(1)
-    # lazy (r11): the nodes checkpoint below is the edge frame's first
-    # materializing consumer — one stage reads the RDD before its blocks
-    # exist, so the lazy checkpoint folds the edge projection into that
-    # job instead of paying a standalone barrier (same analysis as
-    # connected_components' edges)
+    # lazy (r11): the nodes checkpoint below is the one stage that reads
+    # it before its blocks exist (fills.py)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
     ).localCheckpoint(eager=False)
@@ -84,8 +81,7 @@ def pagerank(
     # checkpointed like e/nodes: otherwise every iteration's plan
     # re-executes this groupBy over the full edge list — an extra
     # edge-list shuffle per iteration beyond the documented two.  Lazy
-    # (r11): its first materializing consumer is iteration 1's ranks
-    # checkpoint, where it feeds exactly one join stage.
+    # (r11): iteration 1's ranks checkpoint is its one consumer stage.
     outw = e.groupBy("src").agg(F.sum("w").alias("ow")).localCheckpoint(eager=False)
 
     # the update expression stays ENTIRELY in SQL, with (1.0 - d) written

@@ -140,7 +140,6 @@ def build_training_mix(
     benchmark: DataFrame,
     capacity: int = CONTEXT_TOKENS,
     shards_per_lang: int = 4,
-    materialize_dedup: bool = True,
 ) -> DataFrame:
     """The whole pre-training data pipeline composed into ONE lazy plan:
 
@@ -157,14 +156,12 @@ def build_training_mix(
     ``__spark_entry__.entry()`` plan.
 
     The quality→dedup subtree feeds BOTH the contamination scan and the
-    clean side; fully lazy, the plan computes it twice.  The default
-    ``materialize_dedup=True`` pins that frame (localCheckpoint) so the
-    corpus is scanned and quality-scored ONCE — measured 5× faster at
-    sf0.1 (1.4 s vs 7.3 s; the subtree's regex-heavy Gopher scoring
-    dominates both passes).  A production pipeline writes ``deduped`` to a
-    table here and joins the incremental modes.  ``False`` keeps the
-    single unmaterialized plan — useful only when the input is itself a
-    cheap cached frame.
+    clean side; fully lazy, the plan would compute it twice, so that
+    frame is pinned (lazy localCheckpoint) and the corpus is scanned and
+    quality-scored ONCE — measured 5× faster at sf0.1 (1.4 s vs 7.3 s;
+    the subtree's regex-heavy Gopher scoring dominates both passes).  A
+    production pipeline writes ``deduped`` to a table here and joins the
+    incremental modes.
     """
     from polars_view_spark.operators.dedup import contamination_pairs, dedup_exact
     from polars_view_spark.operators.textstats import fingerprint, gopher_quality
@@ -177,9 +174,9 @@ def build_training_mix(
     # expensive array_distinct/2-gram expressions) for every surviving
     # row even though only the verdict filter consumed them — the
     # contamination scan, mixture and packer need just these four
-    deduped = deduped.select("doc_id", "text", "lang", "source")
-    if materialize_dedup:
-        deduped = deduped.localCheckpoint(eager=False)
+    deduped = deduped.select("doc_id", "text", "lang", "source").localCheckpoint(
+        eager=False
+    )
     # drop BOTH the flagged lookalikes AND the benchmark documents
     # themselves — contamination_pairs skips the trivial self-pair, so the
     # originals would otherwise sail through into the training mix

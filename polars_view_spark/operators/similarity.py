@@ -1123,11 +1123,8 @@ def _kmeans_fit(
     × iterations) behind kmeans_clusters and kmeans_assignments: returns
     the pinned quantized frame, the Arrow argmin assigner closed over the
     FINAL centroids, and the centroid dict."""
-    # eager=False (r11): the init collect below is the frame's first
-    # consumer and materializes the RDD blocks itself — lazy folds the
-    # quantize pass into that job instead of paying a standalone barrier
-    # (single consuming stage at materialization time, so no concurrent
-    # double-compute; the iteration/member jobs then read the blocks)
+    # eager=False (r11): the init collect below is its one consumer stage
+    # (fills.py); the iteration/member jobs then read the blocks
     q = df.select(
         F.col(id_col).alias("vid"),
         F.expr(
@@ -1290,7 +1287,6 @@ def mmr_rerank(
     k: int = 5,
     n_candidates: int = 20,
     lambda_tenths: int = MMR_LAMBDA_TENTHS,
-    materialize: bool = True,
 ) -> DataFrame:
     """Maximal Marginal Relevance rerank (Carbonell & Goldstein, SIGIR
     1998): greedily select ``k`` of the top-``n_candidates`` exact-cosine
@@ -1313,10 +1309,6 @@ def mmr_rerank(
 
     Output: ``(query_id, doc_id, mmr_step, relevance, objective)`` —
     ``objective`` is NULL for step 1 (pure relevance seed).
-
-    ``materialize`` is retained for API compatibility but is now a no-op:
-    the greedy chain no longer re-reads any intermediate, so there is
-    nothing to pin (see below).
     """
     lt, rt = lambda_tenths, 10 - lambda_tenths
 

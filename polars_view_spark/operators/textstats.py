@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from polars_view_spark import fills
 from polars_view_spark.functions.texthash import TOKEN_REGEX
 
 #: Tiny per-language stopword lists for the n-gram/stopword language
@@ -356,7 +357,6 @@ def dsir_weights(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = DSIR_BUCKETS,
-    materialize: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al., Data Selection via
     Importance Resampling, arXiv:2302.03169 — public paper): score every
@@ -420,57 +420,51 @@ def dsir_weights(
     all_rows = Window.partitionBy(F.lit(1)).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    # ONE explode+md5 pass over the corpus: the keep_id table feeds both
-    # the raw model (drop the id) and the scorer — a second
-    # bucketed(corpus) pass would re-run the per-gram md5, the dominant
-    # cost of every hashed-feature operator in this repo
-    corpus_feats = bucketed(corpus, keep_id=True).persist()
-    tgt = model(bucketed(target, keep_id=False), "lp_tgt")
-    raw = model(corpus_feats.select("b"), "lp_raw")
-    # full outer on the bucket id: a bucket seen in only one model falls
-    # back to that model's smoothing floor ln(1/(total+V)); the window runs
-    # over the BOUNDED joined model table (≤ 2·n_buckets rows), never data
-    table = (
-        tgt.join(raw, "b", "full_outer")
-        .select(
-            "b",
-            F.coalesce("lp_tgt", F.max("lp_tgt_floor").over(all_rows)).alias("lp_tgt"),
-            F.coalesce("lp_raw", F.max("lp_raw_floor").over(all_rows)).alias("lp_raw"),
+    with fills.scope() as own:
+        # ONE explode+md5 pass over the corpus: the keep_id table feeds both
+        # the raw model (drop the id) and the scorer — a second
+        # bucketed(corpus) pass would re-run the per-gram md5, the dominant
+        # cost of every hashed-feature operator in this repo
+        corpus_feats = own(bucketed(corpus, keep_id=True).cache())
+        tgt = model(bucketed(target, keep_id=False), "lp_tgt")
+        raw = model(corpus_feats.select("b"), "lp_raw")
+        # full outer on the bucket id: a bucket seen in only one model falls
+        # back to that model's smoothing floor ln(1/(total+V)); the window runs
+        # over the BOUNDED joined model table (≤ 2·n_buckets rows), never data
+        table = (
+            tgt.join(raw, "b", "full_outer")
+            .select(
+                "b",
+                F.coalesce("lp_tgt", F.max("lp_tgt_floor").over(all_rows)).alias("lp_tgt"),
+                F.coalesce("lp_raw", F.max("lp_raw_floor").over(all_rows)).alias("lp_raw"),
+            )
         )
-    )
-    agg = (
-        corpus_feats
-        .join(F.broadcast(table), "b", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.round(F.sum(F.col("lp_tgt") - F.col("lp_raw")) + F.lit(1e-9), 4).alias(
-                "log_importance"
-            ),
-            F.round(F.avg(F.col("lp_tgt") - F.col("lp_raw")) + F.lit(1e-9), 4).alias(
-                "avg_log_importance"
-            ),
+        agg = (
+            corpus_feats
+            .join(F.broadcast(table), "b", "left")
+            .groupBy(id_col)
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+                F.round(F.sum(F.col("lp_tgt") - F.col("lp_raw")) + F.lit(1e-9), 4).alias(
+                    "log_importance"
+                ),
+                F.round(F.avg(F.col("lp_tgt") - F.col("lp_raw")) + F.lit(1e-9), 4).alias(
+                    "avg_log_importance"
+                ),
+            )
         )
-    )
-    result = (
-        corpus.select(id_col)
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            "log_importance",
-            "avg_log_importance",
+        result = (
+            corpus.select(id_col)
+            .join(agg, id_col, "left")
+            .select(
+                id_col,
+                F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
+                "log_importance",
+                "avg_log_importance",
+            )
         )
-    )
-    if materialize:
-        # one row per doc — what a selection pass materializes anyway;
-        # pinning it lets the shared corpus-feature cache be released here
-        result = result.localCheckpoint(eager=True)
-        corpus_feats.unpersist()
-    # materialize=False keeps the full lazy plan (plan-gate introspection /
-    # callers composing further) — the corpus-feature cache then stays
-    # owned by the caller (spark.catalog.clearCache() or .unpersist())
-    return result
+        # one row per doc — what a selection pass materializes anyway
+        return own.result(result)
 
 
 def dedup_lines(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -311,10 +311,10 @@ def read_ndjson_quarantine(spark, path: str, schema: str):
     parent frame — the cache exists because Spark refuses a filter that
     references ONLY the internal corrupt-record column on a direct scan
     (documented Spark limitation), and it also makes the two consumers
-    share one parse pass.  The caller unpersists ``parsed`` when done
-    (unpersisting the derived frames would be a silent no-op: Spark
-    uncaches by plan identity, and the filters' plans are not the cached
-    plan).
+    share one parse pass.  The caller releases ``parsed`` when done, by
+    registering it with its fills scope (fills.py); releasing the derived
+    frames instead would be a silent no-op: Spark uncaches by plan
+    identity, and the filters' plans are not the cached plan.
     """
     full = schema + ", _corrupt_record STRING"
     parsed = (

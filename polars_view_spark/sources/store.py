@@ -78,6 +78,12 @@ def exists(spark, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def is_dir(spark, path: str) -> bool:
+    """True when ``path`` exists and is a directory."""
+    fs, jpath = filesystem(spark, path)
+    return bool(fs.isDirectory(jpath))
+
+
 def swap(spark, staged: str, target: str) -> None:
     """Commit ``staged`` as ``target``: delete the target (if any), then
     rename the staged directory onto it.  Rename onto an EXISTING

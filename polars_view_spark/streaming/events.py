@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from polars_view_spark import fills
 from polars_view_spark.sources import store
 
 #: events table schema with nanosecond ts already normalized to long
@@ -393,14 +394,15 @@ DOCUMENT_SCHEMA = (
 
 
 def _single_file_to_glob(reader, path: str) -> str:
-    """The file source wants a DIRECTORY; a path to one local ``.parquet``
-    FILE streams its parent filtered to that basename.  A *directory*
-    merely named ``*.parquet`` (Spark's own dataset layout) is already the
-    right shape — globbing its basename against the parent would match
-    zero files and stream silently forever."""
+    """The file source wants a DIRECTORY; a path to one ``.parquet`` FILE
+    streams its parent filtered to that basename.  A *directory* merely
+    named ``*.parquet`` (Spark's own dataset layout) is already the right
+    shape — globbing its basename against the parent would match zero
+    files and stream silently forever.  The store probes the path, so a
+    schemed URI (``file:``, ``hdfs://``) is told apart too."""
     import os
 
-    if path.endswith(".parquet") and not os.path.isdir(path):
+    if path.endswith(".parquet") and not store.is_dir(reader._spark, path):
         reader.option("pathGlobFilter", os.path.basename(path))
         return os.path.dirname(path)
     return path
@@ -612,7 +614,7 @@ def _available_now_sink(
     *,
     lead_cols: tuple[str, ...] = (),
     apply_batch=None,
-    pinned: tuple[DataFrame, ...] = (),
+    pinned: fills.scope | None = None,
 ):
     """Start the ONE kind of foreachBatch query this module runs: an
     ``availableNow`` drain checkpointed at ``<sink_dir>.__pvs_ckpt``.
@@ -620,7 +622,7 @@ def _available_now_sink(
     The per-batch body is ``apply_batch`` when given, else
     :func:`_write_sink_batch` over ``batch_frame_fn`` / ``dedup_col`` /
     ``lead_cols`` — the effectively-once sink of sources/store.py.
-    ``pinned`` frames are unpersisted when the query ends, or at once if
+    The ``pinned`` scope is released when the query ends, or at once if
     it fails to start (:func:`_release_on_termination`)."""
     if apply_batch is None:
         apply_batch = functools.partial(
@@ -649,14 +651,15 @@ def _available_now_sink(
     return q
 
 
-def _release_on_termination(spark, frames):
-    """Register (BEFORE ``start()``) a listener that unpersists ``frames``
-    when the caller's query ends (terminated or failed), then deregisters
-    itself — the only end-of-query hook foreachBatch offers.  Registered
-    pre-start so an availableNow query that terminates immediately (empty
-    landing dir) cannot finish before the listener exists; because the
-    target query id is only known after ``start()`` returns, the listener
-    buffers terminations seen while unarmed and ``arm()`` replays them.
+def _release_on_termination(spark, pinned):
+    """Register (BEFORE ``start()``) a listener that releases the fills
+    scope ``pinned`` when the caller's query ends (terminated or failed),
+    then deregisters itself — the only end-of-query hook foreachBatch
+    offers.  Registered pre-start so an availableNow query that terminates
+    immediately (empty landing dir) cannot finish before the listener
+    exists; because the target query id is only known after ``start()``
+    returns, the listener buffers terminations seen while unarmed and
+    ``arm()`` replays them.
     Its caller, :func:`_available_now_sink`, calls ``release_now()`` when
     ``start()`` raises and ``arm(str(q.id))`` after it returns."""
     from pyspark.sql.streaming import StreamingQueryListener
@@ -674,8 +677,7 @@ def _release_on_termination(spark, frames):
             # idempotent: arm() and a late event may both land here
             if not self._done:
                 self._done = True
-                for f in frames:
-                    f.unpersist()
+                pinned.release()
                 spark.streams.removeListener(self)
 
         def arm(self, query_id: str) -> None:
@@ -752,14 +754,14 @@ def streaming_containment_screen(
     # (operators/dedup.py:containment_build_index) instead of computing
     # and pinning the statistics for this query — the 100 TB mode, where
     # the corpus is fingerprinted by one offline job, not per stream
-    # start.  The listener's unpersist calls are no-ops on the loaded
-    # parquet frames.
+    # start; the loaded parquet frames leave the scope empty.
+    pinned = fills.scope()
     if index_path is not None:
         from polars_view_spark.operators.dedup import containment_load_stats
 
         stats = containment_load_stats(corpus.sparkSession, index_path)
     else:
-        stats = containment_corpus_stats(corpus, id_col, text_col)
+        stats = containment_corpus_stats(corpus, id_col, text_col, own=pinned)
 
     return _available_now_sink(
         docs_stream,
@@ -768,7 +770,7 @@ def streaming_containment_screen(
             corpus, batch_df, id_col, text_col, corpus_stats=stats
         ),
         dedup_col=id_col,
-        pinned=(stats[0], stats[1]),
+        pinned=pinned,
     )
 
 
@@ -1219,7 +1221,7 @@ def streaming_linkage(
     Per-trigger cost and orientation (stated precisely — a 100 TB master
     cannot broadcast): the ARRIVING BATCH is the broadcast side
     (``linkage_score``'s ``broadcast_right``), so the master is never
-    shuffled; the master is the probe side, persisted here for the
+    shuffled; the master is the probe side, cached here for the
     query's lifetime (released on termination via the shared listener)
     so each trigger probes cached state rather than re-reading the
     source.  At true 100 TB the production path is a master PARTITIONED
@@ -1229,15 +1231,16 @@ def streaming_linkage(
     """
     from polars_view_spark.operators.linkage import linkage_score
 
-    pinned = master.persist()
+    pinned = fills.scope()
+    master = pinned(master.cache())
     return _available_now_sink(
         arrivals,
         sink_dir,
         lambda batch_df: linkage_score(
-            pinned, batch_df, block_on, rules_fn(), threshold
+            master, batch_df, block_on, rules_fn(), threshold
         ).filter("is_match"),
         dedup_col=id_col,
-        pinned=(pinned,),
+        pinned=pinned,
     )
 
 

@@ -97,6 +97,51 @@ class TestMinHashRecall:
         assert agree >= 0.5  # j>=0.9 -> expected agreement ~0.9
 
 
+class TestFillsReleaseOnFailure:
+    """A step that raises after an operator's caches filled must not leave
+    them behind: the fills.py scope releases them on the way out."""
+
+    @staticmethod
+    def _cache_empty(spark) -> bool:
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def test_minhash_lsh_pairs_releases_its_caches(
+        self, spark, documents, monkeypatch
+    ):
+        from pyspark.sql import DataFrame
+
+        from polars_view_spark.operators import dedup
+
+        def fail_after_fill(*args, **kwargs):
+            for df in (*args, *kwargs.values()):
+                if isinstance(df, DataFrame):
+                    df.count()
+            assert not self._cache_empty(spark)
+            raise RuntimeError("injected verify failure")
+
+        monkeypatch.setattr(dedup, "exact_jaccard_for_pairs", fail_after_fill)
+        spark.catalog.clearCache()
+        with pytest.raises(RuntimeError, match="injected"):
+            dedup.minhash_lsh_pairs(documents, "doc_id", "text")
+        assert self._cache_empty(spark)
+
+    def test_dsir_weights_releases_its_caches(self, spark, documents, monkeypatch):
+        from pyspark.sql import functions as F
+
+        from polars_view_spark.operators.textstats import dsir_weights
+
+        def fail_after_fill(df, *args, **kwargs):
+            df.count()
+            assert not self._cache_empty(spark)
+            raise RuntimeError("injected checkpoint failure")
+
+        monkeypatch.setattr(type(documents), "localCheckpoint", fail_after_fill)
+        spark.catalog.clearCache()
+        with pytest.raises(RuntimeError, match="injected"):
+            dsir_weights(documents, documents.filter(F.col("lang") == "en"))
+        assert self._cache_empty(spark)
+
+
 class TestDedupEval:
     def test_scorecard_on_planted_corpus(self, spark):
         """Planted truth: two same-lang near-dup pairs (tp), one
@@ -1302,23 +1347,6 @@ class TestPackingEdges:
             bm25_topk(df, ())
         with _pt.raises(ValueError):
             bm25_topk(df, ("it's",))
-
-    def test_training_mix_materialized_equals_lazy(self, spark, documents):
-        """materialize_dedup pins the shared subtree without changing the
-        result — the at-scale escape hatch is semantics-preserving."""
-        from pyspark.sql import functions as F
-
-        from polars_view_spark.operators.packing import build_training_mix
-
-        bench = documents.filter(F.col("doc_id") % 97 == 0)
-        key = lambda r: (r["pack_shard"], r["chunk_id"], r["n_docs"], r["n_tokens"])
-        # explicit False: the default flipped to True, so omitting the flag
-        # here would compare the materialized path against itself
-        lazy = sorted(map(key,
-            build_training_mix(documents, bench, materialize_dedup=False).collect()))
-        mat = sorted(map(key,
-            build_training_mix(documents, bench, materialize_dedup=True).collect()))
-        assert lazy == mat and len(lazy) > 0
 
     def test_training_mix_drops_benchmark_docs(self, spark, documents):
         """Benchmark documents must NOT appear in the packed training mix —

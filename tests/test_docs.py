@@ -157,3 +157,89 @@ def test_on_disk_decisions_live_in_the_store():
     else in the package fails here."""
     sites = _store_decision_sites(os.path.join(REPO, "polars_view_spark"))
     assert not sites, "on-disk decisions outside the store:\n" + "\n".join(sites)
+
+
+#: (file, function) pairs allowed to fill or release a cache themselves:
+#: the viewer's session-lifetime source cache and the quarantine reader,
+#: whose cached parse frame the caller registers with its own scope.
+_OWN_FILLS = {
+    ("container.py", "load_data"),
+    (os.path.join("sources", "readers.py"), "read_ndjson_quarantine"),
+}
+
+
+def _fill_sites(pkg_root: str) -> list[str]:
+    """Every ``.persist(``, ``.unpersist(`` and ``.cache()`` call under
+    ``pkg_root`` outside fills.py and :data:`_OWN_FILLS`.  A ``.cache()``
+    handed straight to a fills scope — ``own(df.cache())``, where ``own``
+    is bound by ``with fills.scope() as own``, ``own = fills.scope()`` or
+    a parameter annotated ``fills.scope`` — is how an operator registers
+    its fill, and is allowed."""
+    import ast
+
+    def is_scope(node) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "scope"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "fills"
+        )
+
+    found = []
+    for dirpath, _dirs, files in os.walk(pkg_root):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, pkg_root)
+            if rel == "fills.py":
+                continue
+            tree = ast.parse(open(path).read())
+            scopes = set()
+            for node in ast.walk(tree):
+                if isinstance(node, ast.withitem) and isinstance(
+                    node.optional_vars, ast.Name
+                ):
+                    if isinstance(node.context_expr, ast.Call) and is_scope(
+                        node.context_expr.func
+                    ):
+                        scopes.add(node.optional_vars.id)
+                elif isinstance(node, ast.Assign) and isinstance(node.value, ast.Call):
+                    if is_scope(node.value.func):
+                        scopes.update(
+                            t.id for t in node.targets if isinstance(t, ast.Name)
+                        )
+                elif isinstance(node, ast.arg) and is_scope(node.annotation):
+                    scopes.add(node.arg)
+
+            def visit(node, owner, registered, rel=rel, scopes=scopes):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    owner = node.name
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("persist", "unpersist", "cache")
+                    and id(node) not in registered
+                    and (rel, owner) not in _OWN_FILLS
+                ):
+                    found.append(f"{rel}:{node.lineno}: .{node.func.attr}(")
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id in scopes
+                ):
+                    registered = registered | {id(a) for a in node.args}
+                for child in ast.iter_child_nodes(node):
+                    visit(child, owner, registered)
+
+            visit(tree, None, frozenset())
+    return found
+
+
+def test_operator_fills_go_through_one_scope():
+    """One-way lint: an operator's own caches are registered with a
+    fills.py scope, which releases them on success and on error; a
+    hand-written ``persist``/``unpersist``/``cache`` anywhere else in the
+    package fails here."""
+    sites = _fill_sites(os.path.join(REPO, "polars_view_spark"))
+    assert not sites, "fills outside a fills scope:\n" + "\n".join(sites)

@@ -224,13 +224,14 @@ def test_incremental_minhash_broadcasts_new_batch(spark, cat):
     assert all(r["doc1"] % 10 == 0 or r["doc2"] % 10 == 0 for r in rows)
 
 
-def test_minhash_index_query_never_scans_corpus(spark, tmp_path):
+def test_minhash_index_query_never_scans_corpus(spark, tmp_path, monkeypatch):
     # the build/query split's whole point: after minhash_build_index, the
     # query-side plan reads ONLY the persisted index (signatures +
     # shingles parquet) and the new batch — the corpus source must be
     # absent, and so must any corpus-side re-hashing (VERDICT r06 task 3)
     from pyspark.sql import functions as F
 
+    from polars_view_spark import fills
     from polars_view_spark.catalog import load_tables
     from polars_view_spark.operators.dedup import (
         minhash_build_index,
@@ -249,9 +250,10 @@ def test_minhash_index_query_never_scans_corpus(spark, tmp_path):
     minhash_build_index(corpus, idx, "doc_id", "text")
 
     new = d.filter(F.col("doc_id") % 10 == 0)
-    out = minhash_query_index(
-        spark, new, idx, "doc_id", "text", 0.5, materialize=False
-    )
+    # unpinned (fills.py): the eager result checkpoint would truncate the
+    # lineage to Scan ExistingRDD and blind this introspection
+    monkeypatch.setattr(fills, "PIN_RESULTS", False)
+    out = minhash_query_index(spark, new, idx, "doc_id", "text", 0.5)
     plan = plan_of(out)
     assert "corpus_src" not in plan, "query side re-scanned the corpus"
     assert "signatures" in plan and "shingles" in plan
@@ -414,18 +416,20 @@ def test_lm_score_model_is_broadcast(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_dsir_models_are_broadcast(spark):
+def test_dsir_models_are_broadcast(spark, monkeypatch):
     # both bounded feature models reach the scorer via broadcast hash join;
     # the corpus explode path stays JVM-side with no cross product
     from pyspark.sql import functions as F
 
+    from polars_view_spark import fills
     from polars_view_spark.catalog import load_tables
     from polars_view_spark.operators.textstats import dsir_weights
 
     d = load_tables(spark, SF, "documents")["documents"]
-    # materialize=False: the eager localCheckpoint would truncate the
+    # unpinned (fills.py): the eager localCheckpoint would truncate the
     # lineage to Scan ExistingRDD and blind this introspection
-    out = dsir_weights(d, d.filter(F.col("lang") == "en"), materialize=False)
+    monkeypatch.setattr(fills, "PIN_RESULTS", False)
+    out = dsir_weights(d, d.filter(F.col("lang") == "en"))
     plan = plan_of(out)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
@@ -967,16 +971,14 @@ def test_mmr_rerank_full_lineage_audit(spark):
     """mmr_rerank's execution path localCheckpoints its bounded tables,
     which truncates the audited plan to ExistingRDD scans — so the
     catalog-wide audit can't see inside it.  This gate audits the FULL
-    lineage (materialize=False): the only nested-loop join allowed is
+    lineage: the only nested-loop join allowed is
     the brute-force candidate generator's bounded query broadcast, and
     nothing may introduce a CartesianProduct or row-at-a-time Python."""
     from polars_view_spark.operators.similarity import mmr_rerank
     from polars_view_spark.plans.audit import audit_plan
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = mmr_rerank(
-        emb, emb.filter("vec_id < 3"), k=3, n_candidates=8, materialize=False
-    )
+    df = mmr_rerank(emb, emb.filter("vec_id < 3"), k=3, n_candidates=8)
     a = audit_plan(df)
     assert "CartesianProduct" not in a.plan
     assert not a.has_python_row_eval
@@ -1233,7 +1235,7 @@ def test_simhash_self_join_reuses_band_pipeline(spark, cat):
     assert "BroadcastHashJoin" not in plan
 
 
-def test_minhash_query_index_reuses_band_exchange(spark, tmp_path):
+def test_minhash_query_index_reuses_band_exchange(spark, tmp_path, monkeypatch):
     # r10 optimization, second pass: the union+cap-window band shuffle must
     # compute ONCE per query, the other sort-merge side fed by a
     # ReusedExchange.  Two ingredients, both load-bearing: the MERGE hint
@@ -1244,6 +1246,7 @@ def test_minhash_query_index_reuses_band_exchange(spark, tmp_path):
     # box: ReusedExchange absent with cache, present with checkpoint).
     from pyspark.sql import functions as F
 
+    from polars_view_spark import fills
     from polars_view_spark.catalog import load_tables
     from polars_view_spark.operators.dedup import (
         minhash_build_index,
@@ -1253,9 +1256,9 @@ def test_minhash_query_index_reuses_band_exchange(spark, tmp_path):
     d = load_tables(spark, SF, "documents")["documents"]
     idx = str(tmp_path / "mh_idx_reuse")
     minhash_build_index(d.filter(F.col("doc_id") % 10 != 0), idx, "doc_id", "text")
+    monkeypatch.setattr(fills, "PIN_RESULTS", False)  # full lineage (fills.py)
     out = minhash_query_index(
-        spark, d.filter(F.col("doc_id") % 10 == 0), idx, "doc_id", "text", 0.5,
-        materialize=False,
+        spark, d.filter(F.col("doc_id") % 10 == 0), idx, "doc_id", "text", 0.5
     )
     plan = plan_of(out, final=True)
     assert "ReusedExchange" in plan, (

@@ -289,6 +289,39 @@ def test_scan_operators_run_on_the_ingest_stream(spark):
     assert got == want and len(got) > 0
 
 
+@pytest.mark.parametrize("scheme", ["", "file:"])
+@pytest.mark.parametrize("layout", ["dataset_dir", "single_file"])
+def test_document_stream_reads_dirs_and_files_by_path_or_uri(
+    spark, tmp_path, scheme, layout
+):
+    """read_document_stream takes a Spark dataset directory named
+    ``*.parquet`` or one ``.parquet`` file, by plain path or ``file:`` URI;
+    a dataset directory mistaken for a file would drain zero rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from polars_view_spark.streaming.events import (
+        DOCUMENT_SCHEMA,
+        read_document_stream,
+        run_stream_to_memory,
+    )
+
+    rows = [(1, "a b", "en", "web", 3), (2, "c d", "pt", "web", 3)]
+    path = str(tmp_path / "docs.parquet")
+    if layout == "dataset_dir":
+        spark.createDataFrame(rows, DOCUMENT_SCHEMA).write.parquet(path)
+    else:
+        cols = ["doc_id", "text", "lang", "source", "n_chars"]
+        pq.write_table(
+            pa.table({c: [r[i] for r in rows] for i, c in enumerate(cols)}), path
+        )
+    name = f"doc_stream_{layout}_{'uri' if scheme else 'plain'}"
+    run_stream_to_memory(
+        read_document_stream(spark, scheme + path), name, output_mode="append"
+    )
+    assert sorted(r["doc_id"] for r in spark.table(name).collect()) == [1, 2]
+
+
 def test_streaming_lm_score_matches_batch(spark):
     """LM quality scoring at ingest: the model is trained OFFLINE on the
     static reference slice (lm_train), then the SAME lm_score operator runs
