@@ -7,22 +7,27 @@ returns a NEW container (Spark plans are immutable, so this is free).
 
 Differences from the reference, by design (SURVEY.md §1.1):
 
-- the reference eagerly materializes after every stage; here everything is
-  ONE lazy plan and only ``df_original`` is optionally ``.cache()``d to give
-  the re-query fast path (reference: src/data_container.rs:122-129) a
-  cluster-friendly equivalent;
-- sort-reset (empty criteria) re-derives the view from the cached original
+- the reference eagerly materializes after every stage; here the pipeline
+  is ONE lazy plan and only the post-ingest source (``_source``) is
+  ``.cache()``d, eagerly, to give the re-query fast path (reference:
+  src/data_container.rs:122-129) a cluster-friendly equivalent;
+- each view pins its row order once (``_order``): the first sort click
+  takes one eager checkpoint of ``df_original`` tagged with a tiebreak id,
+  and every later click and the save of that view order it (a sort reset
+  keeps it for the next click) — the reference re-sorts one in-memory
+  frame with ``maintain_order``;
+- sort-reset (empty criteria) re-derives the view from the original plan
   instead of re-reading the file — same observable behavior, no I/O.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
 from polars_view_spark.config import LoadConfig, SortBy
-from polars_view_spark.operators.sort import apply_sort
+from polars_view_spark.operators.sort import PinnedOrder, apply_sort
 from polars_view_spark.operators.transforms import apply_pipeline
 from polars_view_spark.sources.readers import read_any
 
@@ -35,6 +40,7 @@ class DataContainer:
     loaded_format: str
     sort: list[SortBy] = field(default_factory=list)
     _source: DataFrame | None = None  # post-ingest, pre-pipeline frame
+    _order: PinnedOrder | None = None  # df_original's row order, pinned on the first sort
 
     @classmethod
     def load_data(
@@ -67,24 +73,12 @@ class DataContainer:
 
     def with_sort(self, criteria: list[SortBy]) -> DataContainer:
         """Apply a full criteria vector; empty → reset to the original view
-        (reference empty-criteria rebuild, src/data_container.rs:251-267)."""
+        (reference empty-criteria rebuild, src/data_container.rs:251-267).
+        Every sort of this view orders the same pinned checkpoint."""
         if not criteria:
-            return DataContainer(
-                df=self.df_original,
-                df_original=self.df_original,
-                cfg=self.cfg,
-                loaded_format=self.loaded_format,
-                sort=[],
-                _source=self._source,
-            )
-        return DataContainer(
-            df=apply_sort(self.df_original, criteria),
-            df_original=self.df_original,
-            cfg=self.cfg,
-            loaded_format=self.loaded_format,
-            sort=list(criteria),
-            _source=self._source,
-        )
+            return replace(self, df=self.df_original, sort=[])
+        order = self._order or PinnedOrder(self.df_original)
+        return replace(self, df=apply_sort(order, criteria), sort=list(criteria), _order=order)
 
     def requery(self, spark: SparkSession, cfg: LoadConfig) -> DataContainer:
         """Interactive re-query entry point (reference §3.2): reuse the

@@ -38,9 +38,13 @@ recomputing; a cluster deployment that needs that recovery should swap
 the corpus-scale checkpoints (not the exchange-reuse ones) for
 ``checkpoint()``.
 
-Two fills live longer than an operator call and keep their owners: the
-viewer's source cache lives as long as its container (container.py), and
-a stream-lifetime scope is released by the query's termination listener
+Three fills live longer than an operator call and keep their owners:
+the viewer's source cache lives as long as its container (container.py);
+a viewer view's pinned sort order, one eager ``localCheckpoint`` taken on
+its first sort click, is owned by the containers of that view and
+released by the ContextCleaner once they are unreachable
+(operators/sort.py:PinnedOrder); and a stream-lifetime scope is released
+by the query's termination listener
 (streaming/events.py:_release_on_termination) instead of a ``with``
 block.
 

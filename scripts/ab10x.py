@@ -9,14 +9,15 @@ only an INTERLEAVED same-session A/B caught it — cross-run absolutes on a
 co-tenant box drift by ±25 %.  Any change touching a cache / checkpoint /
 join strategy must run through this gate before it ships.
 
-What it does: materializes a git ref ("old") in a throwaway worktree, then
+What it does: exports a git ref ("old") into a throwaway directory, then
 runs the SAME bench entry alternately from old and the working tree
 ("new") — ABBA order across rounds so slow-drift bias cancels — each run a
 fresh ``bench.py`` subprocess with the DuckDB and scaling blocks disabled
 (``SPARK_GRAFT_BENCH_ONLY`` keeps sidecar files unwritten, so the harness
 never overwrites a round's headline numbers).  Prints per-arm min/median
-and writes a JSON artifact (default ``plans/rNN/ab_<entry>_<tag>.json``)
-for the judge to check.
+and writes a JSON artifact (default ``plans/rNN/ab_<entry>_<tag>.json``).
+The export and the ABBA loop are ``exported``/``interleaved`` from
+scripts/perfbench_ab.py, the same A/B over the repository benchmark.
 
 Usage:
     python3 scripts/ab10x.py --entry d_minhash_lsh_pairs --old HEAD~1 \
@@ -31,14 +32,15 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import statistics
 import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKTREE = "/tmp/ab10x_old"
+sys.path.insert(0, REPO)
+
+from scripts.perfbench_ab import exported, interleaved  # noqa: E402
 
 
 def _run_entry(checkout: str, entry: str, sf_dir: str) -> dict[str, float]:
@@ -81,80 +83,56 @@ def main() -> None:
     if args.sf_dir == "/tmp/sfbig" and not os.path.exists(
         "/tmp/sfbig/lineitem.parquet"
     ):
-        sys.path.insert(0, REPO)
         from scripts.scale_sweep import build
 
         print("building 10x instance under /tmp/sfbig ...", flush=True)
         build()
 
-    if os.path.exists(WORKTREE):
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", WORKTREE],
-            cwd=REPO,
-            check=False,
-            capture_output=True,
-        )
-        shutil.rmtree(WORKTREE, ignore_errors=True)
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", WORKTREE, args.old],
-        cwd=REPO,
-        check=True,
+    with exported(args.old) as (old_dir, _):
+        def run(arm: str, rnd: int) -> dict[str, float]:
+            t0 = time.time()
+            q = _run_entry(old_dir if arm == "old" else REPO, args.entry, args.sf_dir)
+            print(
+                f"round {rnd} {arm}: "
+                + ", ".join(f"{k}={v:.3f}s" for k, v in sorted(q.items()))
+                + f"  (wall {time.time() - t0:.0f}s)",
+                flush=True,
+            )
+            return q
+
+        rounds = interleaved(args.rounds, run)
+    results = {arm: [r[arm] for r in rounds] for arm in ("old", "new")}
+    order_log = [arm for r in rounds
+                 for arm in (r["first"], "old" if r["first"] == "new" else "new")]
+    summary: dict[str, dict] = {}
+    names = sorted({k for runs in results.values() for q in runs for k in q})
+    for name in names:
+        summary[name] = {}
+        for arm in ("old", "new"):
+            vals = sorted(q[name] for q in results[arm] if name in q)
+            summary[name][arm] = {
+                "runs": [round(v, 4) for v in vals],
+                "min": round(vals[0], 4),
+                "median": round(statistics.median(vals), 4),
+            }
+        o, n = summary[name]["old"]["median"], summary[name]["new"]["median"]
+        summary[name]["new_over_old_median"] = round(n / o, 3) if o else None
+    artifact = {
+        "entry": args.entry,
+        "old_ref": args.old,
+        "sf_dir": args.sf_dir,
+        "rounds": args.rounds,
+        "order": order_log,
+        "summary": summary,
+    }
+    out = args.out or os.path.join(
+        REPO, "plans", "r11", f"ab_{args.entry}.json"
     )
-    try:
-        results: dict[str, list[dict[str, float]]] = {"old": [], "new": []}
-        order_log = []
-        for rnd in range(args.rounds):
-            # ABBA: old-first on even rounds, new-first on odd — slow
-            # monotone co-tenant drift contributes equally to both arms
-            arms = ("old", "new") if rnd % 2 == 0 else ("new", "old")
-            for arm in arms:
-                checkout = WORKTREE if arm == "old" else REPO
-                t0 = time.time()
-                q = _run_entry(checkout, args.entry, args.sf_dir)
-                results[arm].append(q)
-                order_log.append(arm)
-                print(
-                    f"round {rnd} {arm}: "
-                    + ", ".join(f"{k}={v:.3f}s" for k, v in sorted(q.items()))
-                    + f"  (wall {time.time() - t0:.0f}s)",
-                    flush=True,
-                )
-        summary: dict[str, dict] = {}
-        names = sorted({k for runs in results.values() for q in runs for k in q})
-        for name in names:
-            summary[name] = {}
-            for arm in ("old", "new"):
-                vals = sorted(q[name] for q in results[arm] if name in q)
-                summary[name][arm] = {
-                    "runs": [round(v, 4) for v in vals],
-                    "min": round(vals[0], 4),
-                    "median": round(statistics.median(vals), 4),
-                }
-            o, n = summary[name]["old"]["median"], summary[name]["new"]["median"]
-            summary[name]["new_over_old_median"] = round(n / o, 3) if o else None
-        artifact = {
-            "entry": args.entry,
-            "old_ref": args.old,
-            "sf_dir": args.sf_dir,
-            "rounds": args.rounds,
-            "order": order_log,
-            "summary": summary,
-        }
-        out = args.out or os.path.join(
-            REPO, "plans", "r11", f"ab_{args.entry}.json"
-        )
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        with open(out, "w") as f:
-            json.dump(artifact, f, indent=1)
-        print(json.dumps({k: v["new_over_old_median"] for k, v in summary.items()}))
-        print(f"artifact: {out}")
-    finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", WORKTREE],
-            cwd=REPO,
-            check=False,
-            capture_output=True,
-        )
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    with open(out, "w") as f:
+        json.dump(artifact, f, indent=1)
+    print(json.dumps({k: v["new_over_old_median"] for k, v in summary.items()}))
+    print(f"artifact: {out}")
 
 
 if __name__ == "__main__":
